@@ -37,7 +37,15 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     storage for the rest of the lineage's life). Reaches the
     checkpointed LogicalRDD's underlying RDD via py4j; any surface
     change degrades to a no-op (the blocks then age out with the
-    session — exactly the pre-fix behavior)."""
+    session — exactly the pre-fix behavior).
+
+    Precondition: call this only after a downstream EAGER checkpoint
+    of every frame derived from ``df`` has materialized. A local
+    checkpoint has no lineage to recompute from, so any later read of
+    ``df`` itself (or of a lazy frame over it) fails with "checkpoint
+    block not found". Nothing here checks the ordering; both current
+    call sites release strictly after their dependent eager
+    checkpoint."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:  # noqa: BLE001

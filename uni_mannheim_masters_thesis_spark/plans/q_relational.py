@@ -2195,7 +2195,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with row order. r14 made every output aggregate exact /
     # order-independent (decimal mean above), which un-pins the shape:
     # the local dispatch applies (per-customer relations sit far below
-    # the 200k budget at bench scale) and collapses three range-shuffle
+    # the 100k budget at bench scale) and collapses three range-shuffle
     # checkpoints + counts collects into three broadcast mappings; above
     # budget the distributed two-phase path is unchanged. Verified
     # hash-exact vs the oracle at sf0.001/0.01/0.1 and under the

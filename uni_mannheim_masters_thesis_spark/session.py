@@ -22,6 +22,28 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """The driver heap: 48g, or 3/8 of the host's physical memory where
+    that is less.
+
+    The single local JVM hosts executors, cached artifacts and MLlib
+    fits; 24g showed storage eviction and multi-second GC hiccups in
+    full-registry runs on a 128 GiB host, and 48g (3/8 of it) keeps the
+    shared corpus/feature caches memory-resident. A fixed 48g on a
+    smaller host lets the JVM grow past physical memory until the
+    kernel kills it. ``SPARK_GRAFT_DRIVER_MEM`` overrides the default.
+    """
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{min(48 << 10, kib * 3 // 8 >> 10)}m"
+
+
 def get_session(app_name: str = "umt_spark", cpus: int | None = None) -> SparkSession:
     """Create (or get) a SparkSession with engine defaults."""
     n = cpus or default_parallelism()
@@ -63,11 +85,7 @@ def get_session(app_name: str = "umt_spark", cpus: int | None = None) -> SparkSe
         # (see sources.testdata.load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        # single local JVM hosts executors + cached artifacts + MLlib fits;
-        # 24g showed storage eviction + multi-second GC hiccups landing on
-        # random queries in full-registry runs — 48g (3/8 of the 128 GiB
-        # box) keeps the shared corpus/feature caches memory-resident
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

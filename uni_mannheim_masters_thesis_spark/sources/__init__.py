@@ -1,1 +1,1 @@
-from .testdata import TABLES, load_table, register_views  # noqa: F401
+from .testdata import TABLES, load_table, read_parquet, register_views  # noqa: F401

@@ -10,6 +10,11 @@ which Spark's vectorized reader rejects. We read them via
 ``timestamp`` (microsecond precision; the data carries no sub-microsecond
 digits). Integer division (`div`) keeps the arithmetic exact — a
 float division would lose precision above 2^53 ns.
+
+Every read of a table goes through ``read_parquet``, which remembers the
+schema Spark inferred for a path: schema inference is a Spark job that
+reads the parquet footers, and a session that runs one query after
+another would otherwise pay it on every load of the same table.
 """
 
 from __future__ import annotations
@@ -18,6 +23,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import ensure_engine_confs
 
@@ -40,6 +46,54 @@ _NS_TIMESTAMP_COLS: dict[str, tuple[str, ...]] = {
     "orders": ("o_orderdate",),
     "lineitem": ("l_shipdate",),
 }
+
+
+#: absolute path -> (on-disk stamp, inferred schema); process-wide, shared by
+#: every session and thread (single dict reads and writes are atomic)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple:
+    """What an inferred parquet schema depends on: the bytes on disk and
+    whether TIMESTAMP(NANOS) surfaces as ``bigint``.
+
+    A single file is stamped by its mtime and size; a parquet directory
+    by the sorted (relative path, mtime, size) of the data files Spark
+    lists (names starting with ``_`` or ``.`` are metadata it skips).
+    """
+    if os.path.isdir(path):
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for n in names:
+                if not n.startswith(("_", ".")):
+                    f = os.path.join(root, n)
+                    fst = os.stat(f)
+                    files.append((os.path.relpath(f, path), fst.st_mtime_ns, fst.st_size))
+        disk = tuple(sorted(files))
+    else:
+        st = os.stat(path)
+        disk = (st.st_mtime_ns, st.st_size)
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    return disk, nanos
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    on-disk state of ``path``; later reads pass the remembered schema
+    and launch no inference job.
+
+    Two threads that miss at once both infer; the last write wins, and
+    both schemas are equal. No lock is held across the inference.
+    """
+    path = os.path.abspath(path)
+    stamp = _stamp(spark, path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 def normalize_ts(df: DataFrame, col: str) -> DataFrame:
@@ -68,7 +122,7 @@ def normalize_ts(df: DataFrame, col: str) -> DataFrame:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table with proper timestamp types."""
     ensure_engine_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for c in _NS_TIMESTAMP_COLS.get(name, ()):
         df = normalize_ts(df, c)
     return df
@@ -87,7 +141,7 @@ def event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ensure_engine_confs(spark)
     path = os.path.join(sf_dir, "events.parquet")
-    static = spark.read.parquet(path)
+    static = read_parquet(spark, path)
     reader = spark.readStream.schema(static.schema)
     if os.path.isdir(path):
         stream = reader.parquet(path)

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import ensure_engine_confs
-from ..sources.testdata import event_stream
+from ..sources.testdata import event_stream, load_table
 from .runtime import drain
 
 
@@ -128,7 +128,7 @@ def streaming_events_by_segment(
     """
     ensure_engine_confs(spark)
     stream = event_stream(spark, sf_dir)
-    customers = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    customers = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
     joined = stream.withWatermark("ts", watermark).join(
@@ -186,8 +186,6 @@ def streaming_daily_drift(
     (a bounded driver pull, baked into the stream's bin expression as
     plan literals).
     """
-    from ..sources.testdata import load_table
-
     ensure_engine_confs(spark)
     ev = load_table(spark, sf_dir, "events")
     pop = ev.filter(F.col("event_type").isin("purchase", "click"))
