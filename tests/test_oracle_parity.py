@@ -107,9 +107,10 @@ def rows_only_results(spark, duck):
             sdf, _odf, problems = run_query(
                 spark, cur, name, REGISTRY[name], SF_DIR
             )
-            # "(rows-only)" marks an EMPTY result in run_query; keep the
-            # historical contract of this test (rows >= 0, columns > 0,
-            # plus run_query's ok_-invariant checks)
+            # run_query reports an EMPTY result as a "(rows-only)"
+            # problem, so a rows-only query must return at least one
+            # row (not the old rows >= 0), have columns, and pass
+            # run_query's ok_-invariant checks
             if len(sdf.columns) == 0:
                 problems.append("no output columns")
             return problems

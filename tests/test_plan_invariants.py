@@ -235,7 +235,7 @@ def test_r9s2_topk_plans_take_ordered(spark):
 
 # -- SMOTE / knn_within dispatch: no driver materialization above budget ------
 
-def test_knn_auto_dispatch_never_collects_above_budget(spark):
+def test_knn_auto_dispatch_never_collects_above_budget(spark, force_dispatch):
     """knn_within(method='auto') must plan the blocked distributed
     kernel (FlatMapGroupsInPandas), NOT the driver-broadcast numpy path
     (MapInPandas), whenever the dense build side exceeds the broadcast
@@ -246,11 +246,13 @@ def test_knn_auto_dispatch_never_collects_above_budget(spark):
     from uni_mannheim_masters_thesis_spark.sources.testdata import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings").limit(50)
-    over = knn_within(emb, k=3, broadcast_budget_bytes=0)
+    force_dispatch("DENSE_BYTES", local=False)
+    over = knn_within(emb, k=3)
     plan_over = over._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan_over
     assert "MapInPandas" not in plan_over
-    under = knn_within(emb, k=3, broadcast_budget_bytes=1 << 40)
+    force_dispatch("DENSE_BYTES", local=True)
+    under = knn_within(emb, k=3)
     plan_under = under._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan_under
     cols = ["id", "nn_id", "nn_rank"]
@@ -259,7 +261,7 @@ def test_knn_auto_dispatch_never_collects_above_budget(spark):
     )
 
 
-def test_smote_goes_distributed_above_module_budget(spark, monkeypatch):
+def test_smote_goes_distributed_above_module_budget(spark, force_dispatch):
     """smote() resolves the kNN broadcast budget at CALL time: with the
     module constant forced to 0 the synthesis plan contains no
     driver-broadcast MapInPandas stage, and the synthetic rows are
@@ -281,7 +283,7 @@ def test_smote_goes_distributed_above_module_budget(spark, monkeypatch):
         )
 
     baseline = resample.smote(emb, minority_label=1)
-    monkeypatch.setattr(resample, "KNN_BROADCAST_BUDGET_BYTES", 0)
+    force_dispatch("DENSE_BYTES", local=False)
     distributed = resample.smote(emb, minority_label=1)
     plan = distributed._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan

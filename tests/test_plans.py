@@ -222,15 +222,15 @@ def test_quantile_sketch_within_contract(spark):
         assert r["within_contract"], r["event_type"]
 
 
-def test_ordered_dense_rank_no_global_window_and_exact(spark, monkeypatch):
+def test_ordered_dense_rank_no_global_window_and_exact(spark, force_dispatch):
     """The DISTRIBUTED two-phase ordered rank (operators.indexing, the
     over-budget / 100 TB path) must (a) contain ONLY the
     __pid-partitioned window — an unpartitioned row_number is a
     single-executor sort at corpus vocab scale — and (b) reproduce
     ROW_NUMBER() OVER (ORDER BY key) exactly. Small key sets dispatch
     to the r13 driver-sort + broadcast-mapping path (no window at all;
-    differentially pinned in test_round13_ops), so the shape assertion
-    forces the distributed path via the budget env; exactness is
+    differentially pinned in test_dispatch), so the shape assertion
+    forces the distributed path via the dispatch budget; exactness is
     checked on both."""
     from uni_mannheim_masters_thesis_spark.operators.indexing import (
         ordered_dense_rank,
@@ -239,7 +239,7 @@ def test_ordered_dense_rank_no_global_window_and_exact(spark, monkeypatch):
     df = spark.createDataFrame(
         [(f"tok{i:04d}",) for i in range(97, 0, -7)], ["token"]
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "0")
+    force_dispatch("RANK_KEYS", local=False)
     ranked = ordered_dense_rank(df, "token", rank_col="r", n_parts=4)
     je = ranked._jdf.queryExecution()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -253,8 +253,8 @@ def test_ordered_dense_rank_no_global_window_and_exact(spark, monkeypatch):
     got = {r["token"]: r["r"] for r in ranked.collect()}
     want = {t: i + 1 for i, t in enumerate(sorted(got))}
     assert got == want
-    # default (dispatched) path: same exact ranks, never a window
-    monkeypatch.delenv("SPARK_GRAFT_RANK_LOCAL_BUDGET")
+    # local (driver-sort) path: same exact ranks, never a window
+    force_dispatch("RANK_KEYS", local=True)
     local = ordered_dense_rank(df, "token", rank_col="r", n_parts=4)
     got_local = {r["token"]: r["r"] for r in local.collect()}
     assert got_local == want

@@ -155,7 +155,7 @@ def test_smote_extreme_shortfall_reaches_parity(spark):
     assert len(synth_ids) == len(set(synth_ids)) == 37
 
 
-def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
+def test_connected_components_raises_on_non_convergence(spark, force_dispatch):
     import pytest as _pytest
 
     from uni_mannheim_masters_thesis_spark.operators.dedup import (
@@ -164,7 +164,7 @@ def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
 
     # the guard lives in the distributed loop; pin that path (r13's
     # small-edge-list dispatch would otherwise resolve the chain locally)
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_BUDGET", "0")
+    force_dispatch("GRAPH_EDGES", local=False)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
@@ -270,7 +270,7 @@ def test_tpe_search_deterministic_and_improves(spark):
     assert all(1e-4 - 1e-12 <= r["reg_param"] <= 10.0 + 1e-9 for r in out1)
 
 
-def test_knn_auto_dispatch_by_size(spark):
+def test_knn_auto_dispatch_by_size(spark, force_dispatch):
     """knn_within(method='auto') broadcasts small inputs (numpy path)
     but switches to the blocked distributed kernel when the estimated
     dense build side exceeds the broadcast budget — same exact results
@@ -288,8 +288,9 @@ def test_knn_auto_dispatch_by_size(spark):
     ) as numpy_path:
         small = knn_within(emb, k=3)  # fits the 64 MiB default budget
         assert numpy_path.call_count == 1 and blocked.call_count == 0
-        # force "too big to broadcast" via a tiny budget
-        big = knn_within(emb, k=3, broadcast_budget_bytes=1)
+        # force "too big to broadcast"
+        force_dispatch("DENSE_BYTES", local=False)
+        big = knn_within(emb, k=3)
         assert blocked.call_count == 1
     # neighbor ids + ranks identical; distances agree to float noise
     # (BLAS matmul blocking differs between the two kernels by an ulp)
@@ -359,7 +360,9 @@ def test_rule_point_search_synthetic_landscape(spark):
     ["/root/testdata/sf0.01", "/root/testdata/sf0.1"],
     ids=["sf0.01", "sf0.1-bench-scale"],
 )
-def test_knn_dispatch_boundary_blocked_hash_matches_numpy(spark, sf_dir):
+def test_knn_dispatch_boundary_blocked_hash_matches_numpy(
+    spark, sf_dir, monkeypatch
+):
     """r11 verdict item 7: the knn_within auto-dispatch is the SMOTE
     scale-safety story — pin its equivalence AT BENCH SCALE, not just
     on a 50-row slice. The budget is forced just below the minority
@@ -373,6 +376,7 @@ def test_knn_dispatch_boundary_blocked_hash_matches_numpy(spark, sf_dir):
         _dense_matrix_bytes,
         knn_within,
     )
+    from uni_mannheim_masters_thesis_spark.operators import dispatch
 
     if not os.path.isdir(sf_dir):
         pytest.skip(f"{sf_dir} not present")
@@ -391,9 +395,8 @@ def test_knn_dispatch_boundary_blocked_hash_matches_numpy(spark, sf_dir):
         )
         return hashlib.sha256(repr(rows).encode()).hexdigest()
 
-    auto = knn_within(
-        minority, k=5, broadcast_budget_bytes=dense_bytes - 1
-    )
+    monkeypatch.setattr(dispatch, "DENSE_BYTES", dense_bytes - 1)
+    auto = knn_within(minority, k=5)
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan, plan  # blocked kernel engaged
     assert "MapInPandas" not in plan, plan        # numpy path NOT planned

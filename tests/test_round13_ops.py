@@ -387,124 +387,6 @@ def test_mlp_learning_rate_inert_except_sgd(spark):
         assert np.array_equal(base, _flatten(m))
 
 
-def test_huber_gd_local_dispatch_is_bit_identical(spark, monkeypatch):
-    """r13: ModifiedHuberGD's single-partition local loop must produce
-    BIT-IDENTICAL weights to the distributed per-iteration aggregation
-    (the dispatch replays Spark Sum's null-start left fold op-for-op)."""
-    from uni_mannheim_masters_thesis_spark.ml import classify as C
-    from pyspark.ml.functions import array_to_vector
-
-    rng = np.random.RandomState(7)
-    X = rng.normal(size=(60, 5))
-    y = (X[:, 1] + 0.3 * X[:, 2] > 0).astype(float)
-    df = spark.createDataFrame(
-        [(list(map(float, r)), float(t)) for r, t in zip(X, y)],
-        "xarr array<double>, label double",
-    ).select(
-        array_to_vector("xarr").alias("features"), "label"
-    ).coalesce(1)
-
-    gd = C.ModifiedHuberGD(maxIter=7, step=0.5, regParam=0.01)
-    # forced-local (budget huge) vs forced-distributed (budget zero)
-    monkeypatch.setattr(C, "HUBER_LOCAL_BUDGET_BYTES", 1 << 40)
-    m_local = gd.fit(df)
-    monkeypatch.setattr(C, "HUBER_LOCAL_BUDGET_BYTES", 0)
-    m_dist = gd.fit(df)
-    assert m_local.bias == m_dist.bias
-    assert len(m_local.weights) == len(m_dist.weights)
-    for a, b in zip(m_local.weights, m_dist.weights):
-        assert a == b, (a, b, a - b)
-
-
-def test_connected_components_local_dispatch_matches_distributed(
-    spark, monkeypatch
-):
-    """r13: the driver-side union-find the small-edge-list dispatch uses
-    must return EXACTLY the distributed min-label fixpoint's rows —
-    cluster = smallest reachable id, one row per node seen in an edge."""
-    from uni_mannheim_masters_thesis_spark.operators.dedup import (
-        connected_components,
-    )
-
-    rng = np.random.RandomState(13)
-    # chains, a star, a cycle, isolated pairs, plus random extra edges
-    edges = (
-        [(i, i + 1) for i in range(0, 12)]          # chain 0..12
-        + [(100, j) for j in range(101, 109)]       # star at 100
-        + [(200, 201), (201, 202), (202, 200)]      # triangle
-        + [(300, 301), (400, 401)]                  # isolated pairs
-        + [
-            (int(a), int(b))
-            for a, b in rng.randint(500, 540, size=(25, 2))
-            if a != b
-        ]
-    )
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_BUDGET", "1000000")
-    local_rows = sorted(
-        (r["node"], r["cluster"]) for r in connected_components(df).collect()
-    )
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_BUDGET", "0")
-    dist_rows = sorted(
-        (r["node"], r["cluster"]) for r in connected_components(df).collect()
-    )
-    assert local_rows == dist_rows
-    assert len(local_rows) == len({n for n, _ in local_rows})
-
-
-def test_ordered_dense_rank_local_dispatch_matches_distributed(
-    spark, monkeypatch
-):
-    """r13: the driver-sort + broadcast-mapping dispatch must return
-    EXACTLY the two-phase range-partitioned rank's rows for every key
-    type the engine ranks (struct-of-ints, strings, struct-of-doubles);
-    NULL keys must fall back to the distributed path, not misrank."""
-    from uni_mannheim_masters_thesis_spark.operators import indexing as IX
-
-    def both(df, col):
-        monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "1000000")
-        loc = sorted(map(tuple, IX.ordered_dense_rank(df, col).collect()))
-        monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "0")
-        dist = sorted(map(tuple, IX.ordered_dense_rank(df, col).collect()))
-        return loc, dist
-
-    rng = np.random.RandomState(5)
-    # struct-of-(int, long) keys (the rfm_segments shape)
-    ints = spark.createDataFrame(
-        [(int(v), i) for i, v in enumerate(rng.permutation(500))],
-        "v int, id long",
-    ).withColumn("__k", F.struct("v", "id"))
-    loc, dist = both(ints, "__k")
-    assert loc == dist and len(loc) == 500
-
-    # unique string keys incl. non-ASCII (UTF-8 byte order == code-point
-    # order, so the driver sort must agree with UTF8String comparison)
-    toks = [f"tok_{i:03d}" for i in range(80)] + ["zz", "ärm", "émigré", "中文"]
-    strs = spark.createDataFrame([(t,) for t in toks], "token string")
-    loc, dist = both(strs, "token")
-    assert loc == dist and len(loc) == len(toks)
-
-    # struct-of-(double, long) keys with negatives/near-ties
-    dbl = spark.createDataFrame(
-        [(float(v), i) for i, v in enumerate(rng.normal(size=300))],
-        "score double, id long",
-    ).withColumn("__k", F.struct((-F.col("score")).alias("ns"), "id"))
-    loc, dist = both(dbl, "__k")
-    assert loc == dist and len(loc) == 300
-
-    # NULL key → local path must decline (fall back) and still rank
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "1000000")
-    withnull = spark.createDataFrame(
-        [("a",), (None,), ("b",)], "token string"
-    )
-    rows = {
-        r["token"]: r["rank"]
-        for r in IX.ordered_dense_rank(withnull, "token").collect()
-    }
-    assert rows["a"] < rows["b"] and len(rows) == 3
-
-
 def test_kernel_sweep_identical_fit_memoization_is_sound(spark):
     """r13: identical-(degree, rp) poly configs share ONE LinearSVC fit.
     Soundness rests on fit determinism — the same estimator spec on the
@@ -553,41 +435,3 @@ def test_kernel_sweep_identical_fit_memoization_is_sound(spark):
         assert a["feat_dim"] == b["feat_dim"]
     assert all(r["ok_grid_complete"] for r in out)
 
-
-def test_ordered_prefix_sum_local_dispatch_matches_distributed(
-    spark, monkeypatch
-):
-    """r13: the driver-side exclusive prefix sum must return EXACTLY the
-    two-phase range-partitioned scan's longs, and enforce the same
-    null/duplicate-key contract."""
-    from uni_mannheim_masters_thesis_spark.operators import indexing as IX
-
-    rng = np.random.RandomState(17)
-    df = spark.createDataFrame(
-        [
-            (float(s), int(p), int(n))
-            for s, p, n in zip(
-                rng.permutation(400) / 8.0,
-                rng.randint(0, 5, 400),
-                rng.randint(0, 7, 400),
-            )
-        ],
-        "s double, pos int, neg int",
-    )
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "1000000")
-    loc = sorted(
-        map(tuple, IX.ordered_prefix_sum(df, "s", ["pos", "neg"]).collect())
-    )
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "0")
-    dist = sorted(
-        map(tuple, IX.ordered_prefix_sum(df, "s", ["pos", "neg"]).collect())
-    )
-    assert loc == dist and len(loc) == 400
-
-    # contract: duplicate keys raise on the LOCAL path too
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "1000000")
-    dup = spark.createDataFrame(
-        [(1.0, 1, 1), (1.0, 2, 2)], "s double, pos int, neg int"
-    )
-    with pytest.raises(ValueError, match="duplicate"):
-        IX.ordered_prefix_sum(dup, "s", ["pos", "neg"])

@@ -16,7 +16,7 @@ def _persistent_rdd_count(spark) -> int:
 
 
 def test_dense_rank_duplicate_keys_fall_back_to_distributed(
-    spark, monkeypatch
+    spark, force_dispatch
 ):
     """r13 ADVICE (medium): the local broadcast-mapping join fans out
     duplicate keys (row count would change — every dup row gets every
@@ -24,7 +24,7 @@ def test_dense_rank_duplicate_keys_fall_back_to_distributed(
     which preserves cardinality with merely undefined tie order."""
     from uni_mannheim_masters_thesis_spark.operators import indexing as IX
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "1000000")
+    force_dispatch("RANK_KEYS", local=True)
     dup = spark.createDataFrame(
         [("a", 1), ("b", 2), ("a", 3), ("c", 4), ("b", 5)],
         "token string, payload int",
@@ -42,7 +42,7 @@ def test_dense_rank_duplicate_keys_fall_back_to_distributed(
     assert max(by_tok["a"]) < min(by_tok["b"]) < max(by_tok["b"]) < by_tok["c"][0]
 
 
-def test_prefix_sum_non_integral_values_fall_back(spark, monkeypatch):
+def test_prefix_sum_non_integral_values_fall_back(spark, force_dispatch):
     """r13 ADVICE (low): the local prefix-sum fold truncated each value
     with int(v) BEFORE summing (0.5 + 0.5 -> 0) while the distributed
     path sums natively and casts the running total (-> 1). Non-integral
@@ -58,11 +58,11 @@ def test_prefix_sum_non_integral_values_fall_back(spark, monkeypatch):
     # the two-phase shape's per-partition long-cast totals make the
     # result boundary-dependent, so a single range partition is the
     # only deterministic distributed baseline to compare against
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "1000000")
+    force_dispatch("RANK_KEYS", local=True)
     loc = sorted(
         map(tuple, IX.ordered_prefix_sum(frac, "k", ["v"], n_parts=1).collect())
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "0")
+    force_dispatch("RANK_KEYS", local=False)
     dist = sorted(
         map(tuple, IX.ordered_prefix_sum(frac, "k", ["v"], n_parts=1).collect())
     )
@@ -77,7 +77,7 @@ def test_prefix_sum_non_integral_values_fall_back(spark, monkeypatch):
     # distributed path it falls back to then rejects the NaN itself at
     # execution (ANSI cast of a NaN running sum to long) — consistent
     # with what any out-of-contract caller already saw above budget
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "1000000")
+    force_dispatch("RANK_KEYS", local=True)
     nan = spark.createDataFrame(
         [(1.0, 1.0), (2.0, float("nan")), (3.0, 2.0)], "k double, v double"
     )
@@ -88,18 +88,22 @@ def test_prefix_sum_non_integral_values_fall_back(spark, monkeypatch):
         IX.ordered_prefix_sum(nan, "k", ["v"], n_parts=1).collect()
 
 
-def test_rank_above_budget_releases_probe_snapshot(spark, monkeypatch):
+def test_rank_above_budget_releases_probe_snapshot(
+    spark, monkeypatch, force_dispatch
+):
     """r13 ADVICE (low): the above-budget path held TWO localCheckpoint
     copies (size-probe snapshot + range-partitioned checkpoint). After
     the fix, exactly one persists once the call returns, and the
     results still match the forced-distributed path."""
+    from uni_mannheim_masters_thesis_spark.operators import dispatch
     from uni_mannheim_masters_thesis_spark.operators import indexing as IX
 
     df = spark.createDataFrame(
         [(f"t{i:03d}",) for i in range(50)], "token string"
     )
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "5")  # above budget
+    # a budget the probe runs under and the 50 keys exceed
+    monkeypatch.setattr(dispatch, "RANK_KEYS", 5)
     before = _persistent_rdd_count(spark)
     ranked = sorted(
         map(tuple, IX.ordered_dense_rank(df, "token", n_parts=4).collect())
@@ -107,7 +111,7 @@ def test_rank_above_budget_releases_probe_snapshot(spark, monkeypatch):
     after = _persistent_rdd_count(spark)
     assert after - before <= 1, "probe snapshot blocks were not released"
 
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "0")
+    force_dispatch("RANK_KEYS", local=False)
     dist = sorted(
         map(tuple, IX.ordered_dense_rank(df, "token", n_parts=4).collect())
     )
@@ -117,41 +121,17 @@ def test_rank_above_budget_releases_probe_snapshot(spark, monkeypatch):
     vals = spark.createDataFrame(
         [(float(i), i % 3) for i in range(50)], "k double, v int"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "5")
+    monkeypatch.setattr(dispatch, "RANK_KEYS", 5)
     before = _persistent_rdd_count(spark)
     ps = sorted(
         map(tuple, IX.ordered_prefix_sum(vals, "k", ["v"], n_parts=4).collect())
     )
     after = _persistent_rdd_count(spark)
     assert after - before <= 1
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "0")
+    force_dispatch("RANK_KEYS", local=False)
     assert ps == sorted(
         map(tuple, IX.ordered_prefix_sum(vals, "k", ["v"], n_parts=4).collect())
     )
-
-
-def test_prefix_sum_local_ok_false_skips_probe(spark, monkeypatch):
-    """r13 ADVICE: local_ok=False must keep a known-large caller on the
-    distributed path without paying the size-probe snapshot at all."""
-    from uni_mannheim_masters_thesis_spark.operators import indexing as IX
-
-    monkeypatch.setenv("SPARK_GRAFT_RANK_LOCAL_BUDGET", "1000000")
-    df = spark.createDataFrame(
-        [(float(i), 1) for i in range(20)], "k double, v int"
-    )
-    before = _persistent_rdd_count(spark)
-    out = sorted(
-        map(
-            tuple,
-            IX.ordered_prefix_sum(
-                df, "k", ["v"], n_parts=4, local_ok=False
-            ).collect(),
-        )
-    )
-    after = _persistent_rdd_count(spark)
-    # exactly the ranged checkpoint — no probe snapshot was created
-    assert after - before <= 1
-    assert [r[-1] for r in out] == list(range(20))
 
 
 def test_lda_k_sweep_pooled_fits_match_serial(spark):
@@ -187,32 +167,6 @@ def test_lda_k_sweep_pooled_fits_match_serial(spark):
     finally:
         corpus.unpersist()
     assert serial == pooled  # bit-identical perplexities
-
-
-def test_neardup_pagerank_local_dispatch_matches_distributed(
-    spark, monkeypatch
-):
-    """r14: the driver-side integer PageRank replica must return
-    BIT-IDENTICAL longs to the distributed 5-iteration loop — the
-    recursion is pure integer arithmetic over the edge set, so any
-    divergence is a replica bug."""
-    from conftest import SF_DIR
-    from uni_mannheim_masters_thesis_spark.plans.registry import REGISTRY
-
-    fn = REGISTRY["neardup_pagerank"].fn
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_BUDGET", "1000000")
-    loc = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_BUDGET", "0")
-    dist = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    assert loc == dist and len(loc) > 0
-    # schema parity between the two paths (driver hashes schemas too)
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_BUDGET", "1000000")
-    s_loc = fn(spark, SF_DIR).schema
-    monkeypatch.setenv("SPARK_GRAFT_PR_LOCAL_BUDGET", "0")
-    s_dist = fn(spark, SF_DIR).schema
-    assert [(f.name, f.dataType) for f in s_loc] == [
-        (f.name, f.dataType) for f in s_dist
-    ]
 
 
 def test_sweep_prep_released_after_kernel_svm_sweep_query(

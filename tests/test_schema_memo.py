@@ -9,14 +9,13 @@ import concurrent.futures
 import random
 import shutil
 import sys
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_launched
 from uni_mannheim_masters_thesis_spark.sources.testdata import (
     TABLES,
     load_table,
@@ -25,18 +24,6 @@ from uni_mannheim_masters_thesis_spark.sources.testdata import (
 )
 
 TS_COLS = {"events": "ts", "orders": "o_orderdate", "lineitem": "l_shipdate"}
-
-
-def jobs_launched(spark, fn):
-    """(fn(), number of Spark jobs fn launched from this thread)."""
-    sc = spark.sparkContext
-    group = f"schema-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def fresh_schema(spark, sf_dir, name):

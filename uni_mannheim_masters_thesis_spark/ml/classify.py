@@ -41,22 +41,10 @@ from pyspark.ml.feature import StandardScaler, VectorAssembler
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators import dispatch
 from ..operators.evaluation import classification_metrics, confusion_matrix
 
 SEED = 42  # reference uses random_state=42 throughout
-
-# Collect budget for ModifiedHuberGD's single-partition local loop
-# (r13, guide §1.2): below this many bytes of (d+1)-double rows the 30
-# GD iterations run driver-side with bit-identical float folds instead
-# of 30 re-planned/re-compiled distributed aggregations; above it (or
-# multi-partition — the 100 TB shape) the distributed loop runs
-# unchanged. Same dispatch discipline as the kNN kernel's blocked path
-# and the MLP config-parallel trainer.
-import os as _os
-
-HUBER_LOCAL_BUDGET_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_HUBER_LOCAL_BUDGET", str(64 << 20))
-)
 
 
 def assemble_features(
@@ -245,13 +233,11 @@ class ModifiedHuberGD:
         # and fits a bounded collect, run the same 30 iterations on the
         # driver with an op-for-op replica of the SQL fold
         # (_fit_single_partition_local) — BIT-IDENTICAL weights, pinned
-        # differentially in tests/test_round13_ops.py. Above the budget
-        # or multi-partition (the 100 TB shape) the distributed loop
-        # below runs unchanged — same dispatch discipline as the kNN
-        # kernel's blocked path and the MLP config-parallel trainer.
-        if (
-            base.rdd.getNumPartitions() == 1
-            and n * (d + 1) * 8 <= HUBER_LOCAL_BUDGET_BYTES
+        # differentially in tests/test_dispatch.py. Above the
+        # dispatch.DENSE_BYTES budget or multi-partition (the 100 TB
+        # shape) the distributed loop below runs unchanged.
+        if base.rdd.getNumPartitions() == 1 and dispatch.fits_driver(
+            n * (d + 1) * 8
         ):
             data = base.collect()
             base.unpersist()

@@ -33,7 +33,6 @@ sigmoid under binary cross-entropy.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 import numpy as np
@@ -41,23 +40,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Dispatch budget for the config-parallel training path (r13 guide §1.2
-# "the distributed algorithm" / §2.6 "overlap independent jobs"): when
-# the TRAINING DATA fits comfortably in one broadcast, the parallel axis
-# should be the independent CONFIGS, not the data — one task per config,
-# zero per-epoch barriers — instead of `epochs` lockstep barriers whose
-# per-pass compute (every config's gradient on every block) lands on as
-# few cores as there are data partitions. At 100 TB the estimate blows
-# the budget and the lockstep data-parallel path below runs unchanged —
-# the same size-dispatch discipline as the kNN kernel's blocked path
-# (ml/resample.py). Both paths produce BIT-IDENTICAL models: the
-# config-parallel task walks the same partition-ordered block list and
-# folds gradients in the same left-to-right order as
-# mapPartitions(...).reduce(add) (differentially pinned in
-# tests/test_round13_ops.py).
-MLP_BCAST_BUDGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_MLP_BCAST_BUDGET", str(64 << 20))
-)
+from ..operators import dispatch
 
 MLP_HIDDEN = ((50, 50, 50), (50, 100, 50), (100,))
 MLP_ACTIVATIONS = ("tanh", "relu", "logistic", "identity")
@@ -206,6 +189,14 @@ def _weight_mask(shapes):
     return np.concatenate(parts)
 
 
+def _dot(a: np.ndarray, b: np.ndarray) -> float:
+    """Inner product whose rounding ignores the BLAS thread count (BLAS
+    ``a @ b`` splits ~10k+ sums across threads): the lockstep path
+    steps solvers on the driver, the config-parallel one in a
+    one-thread Python worker, and both must round alike."""
+    return float(np.sum(a * b))
+
+
 class _SolverState:
     """Per-model solver bookkeeping: one gradient eval per epoch for
     every solver (the lockstep property that lets a batch of configs
@@ -237,24 +228,24 @@ class _SolverState:
             if self.prev_flat is not None:
                 s = flat - self.prev_flat
                 yv = grad - self.prev_grad
-                if float(s @ yv) > 1e-10:
+                if _dot(s, yv) > 1e-10:
                     self.hist.append((s, yv))
                     if len(self.hist) > 5:
                         self.hist.pop(0)
             q = grad.copy()
             alphas = []
             for s, yv in reversed(self.hist):
-                rho = 1.0 / float(s @ yv)
-                a = rho * float(s @ q)
+                rho = 1.0 / _dot(s, yv)
+                a = rho * _dot(s, q)
                 alphas.append((rho, a, s, yv))
                 q -= a * yv
             if self.hist:
                 s, yv = self.hist[-1]
-                q *= float(s @ yv) / float(yv @ yv)
+                q *= _dot(s, yv) / _dot(yv, yv)
             else:
-                q *= 0.05 / (np.linalg.norm(q) + 1e-12)
+                q *= 0.05 / (np.sqrt(_dot(q, q)) + 1e-12)
             for rho, a, s, yv in reversed(alphas):
-                beta = rho * float(yv @ q)
+                beta = rho * _dot(yv, q)
                 q += s * (a - beta)
             self.prev_flat, self.prev_grad = flat.copy(), grad.copy()
             # fixed 0.5 damping instead of a line search: one gradient
@@ -316,7 +307,7 @@ def _train_mlp_batch_config_parallel(
     broadcast block list — `len(configs)` independent tasks instead of
     `epochs` barriers (the config axis is embarrassingly parallel; this
     is CrossValidator's parallelism shape). The collect is bounded by
-    MLP_BCAST_BUDGET_BYTES (checked by the dispatcher)."""
+    dispatch.DENSE_BYTES (checked by the dispatcher)."""
     sc = blocks.context
     data = blocks.collect()  # bounded: dispatcher checked the budget
     bc = sc.broadcast(data)
@@ -347,10 +338,13 @@ def train_mlp_batch(
     then each model's solver folds its own update driver-side. Returns
     the fitted flat parameter vectors, config-aligned.
 
-    When the training data fits MLP_BCAST_BUDGET_BYTES, dispatches to
-    the config-parallel path (bit-identical models, one task per config,
-    no per-epoch barriers — see the budget constant's comment)."""
-    if n_rows * (dim + 1) * 8 <= MLP_BCAST_BUDGET_BYTES and len(configs) > 1:
+    When the training data fits dispatch.DENSE_BYTES the parallel
+    axis is the CONFIGS: one task per config, no per-epoch barriers,
+    instead of `epochs` lockstep barriers whose compute lands on as
+    few cores as there are data partitions. At 100 TB the lockstep
+    data-parallel path below runs. Both give BIT-IDENTICAL models (same
+    block order and left-to-right gradient fold; tests/test_dispatch.py)."""
+    if len(configs) > 1 and dispatch.fits_driver(n_rows * (dim + 1) * 8):
         return _train_mlp_batch_config_parallel(
             blocks, n_rows, dim, configs, epochs
         )

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators import dispatch
+
 SEED = 42
 
 
@@ -39,15 +41,6 @@ def _sq_dist(a, b):
     from ..functions.similarity import sq_dist
 
     return sq_dist(a, b)
-
-
-# Broadcast budget for the numpy fast path: bytes of the dense float64
-# build matrix (count × dim × 8) that would be collected to the driver
-# and broadcast. 64 MiB mirrors the order of magnitude one would set
-# spark.sql.autoBroadcastJoinThreshold to for a beefy driver; above it
-# the 'auto' dispatch switches to the blocked distributed kernel
-# instead of risking a driver OOM.
-KNN_BROADCAST_BUDGET_BYTES = 64 * 1024 * 1024
 
 
 def _dense_matrix_bytes(df: DataFrame, vec_col: str) -> int:
@@ -66,7 +59,6 @@ def knn_within(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     method: str = "auto",
-    broadcast_budget_bytes: int | None = None,
 ) -> DataFrame:
     """k nearest same-set neighbors by squared euclidean distance.
 
@@ -75,7 +67,7 @@ def knn_within(
 
     ``method='auto'`` (default): size-dispatched — estimates the dense
     build-side bytes (count × dim × 8, one aggregate job) and takes the
-    'numpy' broadcast path only when it fits ``broadcast_budget_bytes``;
+    'numpy' broadcast path only when it fits ``dispatch.DENSE_BYTES``;
     otherwise the 'blocked' distributed kernel. Both are EXACT with the
     same deterministic (dist, id) tie-break, so dispatch never changes
     results — only the plan. A caller handing in a table too big to
@@ -95,11 +87,6 @@ def knn_within(
     ``method='join'``: pure-DataFrame O(n²) pair join, no numpy — the
     semantics reference.
     """
-    if broadcast_budget_bytes is None:
-        # resolved at CALL time (not def time) so tests and deployments
-        # can retune the module constant and every auto-dispatch caller
-        # — including smote()'s internal kNN — picks it up
-        broadcast_budget_bytes = KNN_BROADCAST_BUDGET_BYTES
     if method == "join":
         return _knn_within_join(df, k, id_col, vec_col)
     if method == "lsh":
@@ -107,7 +94,7 @@ def knn_within(
     if method == "blocked":
         return _knn_within_blocked(df, k, id_col, vec_col)
     if method == "auto":
-        if _dense_matrix_bytes(df, vec_col) > broadcast_budget_bytes:
+        if not dispatch.fits_driver(_dense_matrix_bytes(df, vec_col)):
             return _knn_within_blocked(df, k, id_col, vec_col)
         return _knn_within_numpy(df, k, id_col, vec_col)
     return _knn_within_numpy(df, k, id_col, vec_col)

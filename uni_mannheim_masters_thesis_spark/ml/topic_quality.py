@@ -24,6 +24,8 @@ from pyspark.ml.stat import Summarizer
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.dispatch import spread
+
 
 def log_perplexity(model: LDAModel, corpus: DataFrame) -> float:
     """M25: upper bound on negative log-likelihood per token."""
@@ -175,9 +177,7 @@ def cv_coherence(
     # every downstream count is an exact integer interval sum, so
     # spreading is value-neutral (r13, guide §2.5; never touches the
     # shared cached frame itself — fits stay on the original layout)
-    par = spark.sparkContext.defaultParallelism
-    if tokens_df.rdd.getNumPartitions() < par:
-        tokens_df = tokens_df.repartition(par)
+    tokens_df = spread(tokens_df)
     topics = model.describeTopics(top_n).select(
         "topic", F.posexplode("termIndices").alias("rank", "term_id")
     ).collect()

@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dispatch import spread
+
 CDC_WINDOW = 6     # rolling-window width in bytes (<= 7: the window
                    # must read as an exact signed-64-bit integer)
 CDC_DIVISOR = 19   # boundary iff window-int % divisor == 0. PRIME so
@@ -132,9 +134,7 @@ def binary_neardup_pairs(
     # chunking; spread it across the cluster first. At 100 TB the scan
     # already yields a partition per ~128 MB split and this exchange
     # moves one batch per core — noise next to the scan itself.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par, id_col)
+    df = spread(df, id_col)
     chunks = (
         # empty payloads drop BEFORE chunking on the cheap length
         # predicate (pushable to the scan); a non-empty payload always

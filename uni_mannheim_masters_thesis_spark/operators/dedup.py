@@ -18,16 +18,17 @@ training-data pipeline needs:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.ml.feature import CountVectorizer, MinHashLSH
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
+from . import dispatch
 
-def _cc_local(both: DataFrame) -> DataFrame:
-    """Driver-side union-find over a collected (u, v) edge list.
+
+def _cc_local(both: DataFrame, edges: list[Row]) -> DataFrame:
+    """Driver-side union-find over ``both``'s collected (u, v) rows.
 
     Computes exactly the distributed fixpoint's answer — for every node
     appearing in an edge, cluster = the smallest node id in its
@@ -44,8 +45,7 @@ def _cc_local(both: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for r in both.collect():
-        u, v = r[0], r[1]
+    for u, v in edges:
         if u not in parent:
             parent[u] = u
         if v not in parent:
@@ -355,9 +355,9 @@ def connected_components(
     few rounds to cut lineage; iterations are bounded by component
     diameter, which for near-dup graphs is small (dups cluster densely).
 
-    Edge lists small enough to collect (≤ ``SPARK_GRAFT_CC_LOCAL_BUDGET``
-    edges, default 200k — near-dup graphs at bench scale are a few
-    hundred) resolve driver-side with union-find instead: the fixpoint
+    Edge lists small enough to collect (≤ ``dispatch.GRAPH_EDGES``
+    edges, 200k — near-dup graphs at bench scale are a few hundred)
+    resolve driver-side with union-find instead: the fixpoint
     (cluster = smallest reachable id) is a pure function of the edge
     SET, so the two paths return identical rows, and the multi-round
     join/checkpoint/convergence-count overhead (~0.4 s/round of fixed
@@ -376,10 +376,10 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    budget = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_BUDGET", "200000"))
-    # both holds each edge twice; count is ~free on the checkpoint
-    if both.count() <= 2 * budget:
-        return _cc_local(both)
+    # both holds each edge twice
+    rows = dispatch.bounded_collect(both, 2 * dispatch.GRAPH_EDGES)
+    if rows is not None:
+        return _cc_local(both, rows)
     labels = (
         both.select(F.col("u").alias("node"))
         .distinct()

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from . import dispatch
+
 
 def _release_local_checkpoint(df: DataFrame) -> None:
     """Free the executor blocks behind a ``localCheckpoint``-ed frame
@@ -77,8 +79,8 @@ def ordered_dense_rank(
     Keys must be unique (vocabulary terms, manifest paths, …); with
     duplicates the tie-break within a range partition is undefined.
 
-    Key sets within ``SPARK_GRAFT_RANK_LOCAL_BUDGET`` rows (default
-    100k — vocab/manifest/per-customer frames at bench scale are a few
+    Key sets within ``dispatch.RANK_KEYS`` rows (100k —
+    vocab/manifest/per-customer frames at bench scale are a few
     thousand; the r14 10× crossover probe put driver sort + mapping
     broadcast ≈ the range-shuffle path at ~100-120k long keys and
     earlier for struct keys, so the budget sits at the measured
@@ -101,19 +103,14 @@ def ordered_dense_rank(
     avg_monetary moved 1 ulp at sf0.1 under the local path; every
     other consumer is row-identical).
     """
-    import os
-
-    budget = int(os.environ.get("SPARK_GRAFT_RANK_LOCAL_BUDGET", "100000"))
+    budget = dispatch.RANK_KEYS
     if budget > 0 and local_ok:
         # one materialization of the input (the distributed path pays
         # this too, via repartitionByRange sampling + shuffle); the
-        # size probe and the key collect share ONE bounded job (r14:
-        # limit(budget+1) caps driver memory exactly like the old
-        # count-then-collect pair — len > budget means above budget —
-        # minus one job per call across the 15 rank consumers)
+        # size probe and the key collect are ONE bounded job
         snap = df.localCheckpoint(eager=True)
-        keys = snap.select(order_col).limit(budget + 1).collect()
-        if len(keys) <= budget:
+        keys = dispatch.bounded_collect(snap.select(order_col), budget)
+        if keys is not None:
             try:
                 ordered = sorted(_nan_free_key(r[0]) for r in keys)
             except TypeError:
@@ -232,7 +229,6 @@ def ordered_prefix_sum(
     val_cols: list[str],
     prefix: str = "ps_",
     n_parts: int = 32,
-    local_ok: bool = True,
 ) -> DataFrame:
     """Append EXCLUSIVE running sums of ``val_cols`` under the global
     ``order_col`` order (``prefix + c`` = sum of c over all rows with a
@@ -250,25 +246,20 @@ def ordered_prefix_sum(
     a few thousand).
 
     Same local dispatch as :func:`ordered_dense_rank`: key sets within
-    ``SPARK_GRAFT_RANK_LOCAL_BUDGET`` prefix-sum on the driver (exact
-    Python-int accumulation over the same strictly-smaller-key order)
-    and broadcast the mapping back — identical longs, minus the range
+    ``dispatch.RANK_KEYS`` prefix-sum on the driver (exact Python-int
+    accumulation over the same strictly-smaller-key order) and
+    broadcast the mapping back — identical longs, minus the range
     shuffle, double lineage evaluation and window. The null/duplicate
     contract check is enforced identically on both paths.
-
-    ``local_ok=False`` (r13 ADVICE) keeps a caller that prefix-sums an
-    unbounded relation on the distributed path at any size — it skips
-    the size-probe snapshot entirely, so the 100 TB shape pays exactly
-    one checkpoint (the range-partitioned one), never two.
     """
-    import os
-
-    budget = int(os.environ.get("SPARK_GRAFT_RANK_LOCAL_BUDGET", "100000"))
+    budget = dispatch.RANK_KEYS
     _snap_to_release = None
-    if budget > 0 and local_ok:
+    if budget > 0:
         snap = df.localCheckpoint(eager=True)
-        if snap.count() <= budget:
-            rows = snap.select(order_col, *val_cols).collect()
+        rows = dispatch.bounded_collect(
+            snap.select(order_col, *val_cols), budget
+        )
+        if rows is not None:
             keys = [r[0] for r in rows]
             n_null = sum(1 for k in keys if k is None)
             seen: set = set()

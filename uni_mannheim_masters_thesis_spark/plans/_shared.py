@@ -48,6 +48,7 @@ from ..functions.text import (
 )
 from ..functions.similarity import cosine_similarity, jaro_winkler
 from ..operators.dedup import add_simhash, dedup_stats, minhash_lsh_pairs
+from ..operators.dispatch import spread as _spread  # noqa: F401 (re-export)
 from ..operators.indexing import ordered_dense_rank
 from ..operators.evaluation import classification_metrics, confusion_matrix
 from ..operators.relational import per_group_first, topk_per_group
@@ -80,23 +81,6 @@ def _register(name: str, sql: str | None, survey: str, doc: str):
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
-
-
-def _spread(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition a one-split scan across the cluster before a
-    CPU-dense row-local stage. Test-scale tables are ONE parquet file
-    = one input partition, which serializes per-row expression work
-    (rolling-hash windows, ×100 bootstrap fan-outs, simhash folds) on
-    a single core; at 100 TB the scan already yields a partition per
-    ~128 MB split and this branch never fires. Callers apply it only
-    where every downstream consumer is row-local work or an exact
-    (integer/decimal/count) aggregation, so results are unaffected.
-    Pass only near-scan frames (``.rdd`` on a frame with upstream
-    exchanges would trigger partial AQE execution)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
-        return df
-    return df.repartition(par, *keys) if keys else df.repartition(par)
 
 
 def _dec(col: str | F.Column, prec: str = "decimal(18,2)") -> F.Column:

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import MIN_DOC_WORDS, tokens_pipeline
+from ..operators.dispatch import spread
 from ..ml.topics import (
     MIN_TOPIC_PROBABILITY,
     MIN_TOPICS_POLYSEMOUS,
@@ -63,11 +64,7 @@ def flagship_polysemy(
     # row-local and deterministic: spread the one-file-scan corpus
     # across cores for the transform only. At 100 TB the cached corpus
     # already has a partition per split and this branch never fires.
-    par = spark.sparkContext.defaultParallelism
-    inf_src = corpus
-    if corpus.rdd.getNumPartitions() < par:
-        inf_src = corpus.repartition(par)
-    dist = infer_topics(model, inf_src)
+    dist = infer_topics(model, spread(corpus))
     scored = dist.withColumn(
         "n_topics", polysemy_n_topics(F.col("topicDistribution"), min_probability)
     ).withColumn("is_polysemous", F.col("n_topics") > F.lit(min_topics))

@@ -502,8 +502,6 @@ def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_quality_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokenize
 
-    from ._shared import _spread
-
     docs = _t(spark, sf_dir, "documents")
     # settle the tokenize pass ONCE, spread across cores: the plan
     # consumes `toks` three times (bigram instances, bigram counts,
@@ -1605,13 +1603,8 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition, which would serialize the whole CPU-bound token
     # pipeline (tokenize + 4 array passes per row); spread it first.
     # At 100 TB the scan already yields a partition per split and this
-    # branch never fires (binary_dedup's cdc_near_duplicates idiom).
-    par = spark.sparkContext.defaultParallelism
-    pipe_src = (
-        docs.repartition(par, "doc_id")
-        if docs.rdd.getNumPartitions() < par
-        else docs
-    )
+    # branch never fires.
+    pipe_src = _spread(docs, "doc_id")
     # ONE clean+split pass: rt materializes in its own projection (the
     # gopher_admission CSE discipline — CollapseProject won't inline a
     # multiply-referenced non-trivial alias), and the clean token
@@ -1665,7 +1658,7 @@ def q_curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every consumer is an equi-join or aggregation over the row set.
     ts = (
         exact.filter(F.size("t") >= 3)
-        .repartition(par, "doc_id")
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .select("doc_id", "source", "t", shingles.alias("sh"))
         .localCheckpoint(eager=True)
     )

@@ -893,8 +893,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ml.shared import shared_neardup_pairs
-
-    import os
+    from ..operators import dispatch
 
     pairs = shared_neardup_pairs(spark, sf_dir)
     # r14 (guide §1.2/§5, the r13 union-find discipline): the whole
@@ -903,52 +902,45 @@ def q_neardup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fixpoint is a pure function of the edge SET — a driver-side
     # replica returns bit-identical longs while collapsing 5 iterations
     # of join + groupBy + eager checkpoint (~30 jobs) into one bounded
-    # collect. Pair sets within SPARK_GRAFT_PR_LOCAL_BUDGET edges run
-    # locally; above the budget (the 100 TB shape) the distributed loop
-    # below is untouched. Pinned by
-    # test_neardup_pagerank_local_dispatch_matches_distributed.
-    budget = int(os.environ.get("SPARK_GRAFT_PR_LOCAL_BUDGET", "200000"))
-    if budget > 0:
-        pair_rows = pairs.limit(budget + 1).collect()
-        if len(pair_rows) <= budget:
-            from collections import defaultdict
+    # collect. Pair sets within dispatch.GRAPH_EDGES edges run locally;
+    # above the budget (the 100 TB shape) the distributed loop below is
+    # untouched. Pinned by tests/test_dispatch.py.
+    pair_rows = dispatch.bounded_collect(pairs, dispatch.GRAPH_EDGES)
+    if pair_rows is not None:
+        from collections import defaultdict
 
-            deg: dict = defaultdict(int)
-            out_edges: dict = defaultdict(list)
-            for r in pair_rows:
-                a, b = int(r["id_a"]), int(r["id_b"])
-                deg[a] += 1
-                deg[b] += 1
-                out_edges[a].append(b)
-                out_edges[b].append(a)
-            from pyspark.sql.types import LongType, StructField, StructType
+        deg: dict = defaultdict(int)
+        out_edges: dict = defaultdict(list)
+        for r in pair_rows:
+            a, b = int(r["id_a"]), int(r["id_b"])
+            deg[a] += 1
+            deg[b] += 1
+            out_edges[a].append(b)
+            out_edges[b].append(a)
+        from pyspark.sql.types import LongType, StructField, StructType
 
-            n = len(deg)
-            # mirror the distributed path's output types exactly
-            # (vec_id keeps the id column's type; rank is a long)
-            schema = StructType(
-                [
-                    StructField("vec_id", pairs.schema["id_a"].dataType),
-                    StructField("rank_e12", LongType()),
-                ]
-            )
-            if n == 0:
-                return spark.createDataFrame([], schema)
-            init = 1_000_000_000_000 // n
-            base = 150_000_000_000 // n
-            ranks = {node: init for node in deg}
-            for _ in range(5):
-                s: dict = defaultdict(int)
-                for src, rank_u in ranks.items():
-                    c = rank_u // deg[src]
-                    for dst in out_edges[src]:
-                        s[dst] += c
-                ranks = {
-                    node: base + (85 * v) // 100 for node, v in s.items()
-                }
-            return spark.createDataFrame(
-                sorted(ranks.items()), schema
-            )
+        n = len(deg)
+        # mirror the distributed path's output types exactly
+        # (vec_id keeps the id column's type; rank is a long)
+        schema = StructType(
+            [
+                StructField("vec_id", pairs.schema["id_a"].dataType),
+                StructField("rank_e12", LongType()),
+            ]
+        )
+        if n == 0:
+            return spark.createDataFrame([], schema)
+        init = 1_000_000_000_000 // n
+        base = 150_000_000_000 // n
+        ranks = {node: init for node in deg}
+        for _ in range(5):
+            s: dict = defaultdict(int)
+            for src, rank_u in ranks.items():
+                c = rank_u // deg[src]
+                for dst in out_edges[src]:
+                    s[dst] += c
+            ranks = {node: base + (85 * v) // 100 for node, v in s.items()}
+        return spark.createDataFrame(sorted(ranks.items()), schema)
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
