@@ -24,7 +24,6 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
 from uni_mannheim_masters_thesis_spark.plans.registry import (
-    _COST_HINT,
     _DRIVER_SUITES,
     REGISTRY,
 )
@@ -42,7 +41,26 @@ _MAX_LINE = 1600
 # instead of escaping under the flat floor and tripping the driver's
 # 2x-pin gate on a sub-second delta (r11: multimodal_resize
 # 0.29->0.82s, bpe_subword_counts 0.23->0.48s, both steady warm).
-_PROTOCOL = "v3-single-run+spike-median3-scaled-slack"
+# v4: the retime baseline is min(pinned, last recorded time), both
+# taken only from files at the run's scale factor (1.0 when neither
+# has the query), replacing the hand-typed per-query cost hints.
+_PROTOCOL = "v4-single-run+spike-median3-scaled-slack+measured-baseline"
+
+
+def _load_times(path: str) -> tuple[object, dict[str, float]]:
+    """(sf, {query: seconds > 0}) from a bench artifact; (None, {})
+    when the file is missing or unreadable. Files without an sf field
+    predate it and were all sf0.1."""
+    try:
+        with open(path) as f:
+            doc = json.load(f)
+    except (OSError, ValueError):
+        return None, {}
+    return doc.get("sf", 0.1), {
+        k: v
+        for k, v in doc.get("queries", {}).items()
+        if isinstance(v, (int, float)) and v > 0
+    }
 
 
 def _capped_queries(timings: dict[str, float]) -> dict[str, float]:
@@ -184,27 +202,35 @@ def main() -> None:
     # the r01 baseline instead of double-counting ~30s of duplicate work
     names = [n for n in REGISTRY if n not in _DRIVER_SUITES]
 
-    # Self-tuning retime baseline: a query's expected cost is the MIN of
-    # its static hint and its previous recorded time (bench_full.json
-    # from the last run). Static hints go stale when a query gets
-    # optimized (r4 evidence: classifier_battery hint 15.4 vs true 8.2s
-    # let a 24.5s GC-spike first run escape the retime guard); a
-    # contaminated-high previous time is equally neutralized because
-    # min() falls back to the hint.
-    prev: dict[str, float] = {}
-    try:
-        with open(os.path.join(_REPO, "bench_full.json")) as f:
-            prev = {
-                k: v
-                for k, v in json.load(f).get("queries", {}).items()
-                if isinstance(v, (int, float)) and v > 0
-            }
-    except Exception:  # noqa: BLE001
-        pass
+    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
+    # Per-query regression gate reference: the PINNED committed run
+    # (bench_pinned.json) rather than only the rolling previous run —
+    # totals + noise band can't catch a single query regressing 2×
+    # (r5 evidence: classifier_battery +21% went unflagged).
+    pinned_sf, pinned = _load_times(os.path.join(_REPO, "bench_pinned.json"))
+    if pinned_sf is not None and pinned_sf != sf_val:
+        # timings at a different scale factor are incomparable — a run
+        # at sf0.01 would flag every pinned-sf0.1 query as 'improved'
+        # and any sf1 run as regressed across the board
+        print(
+            f"bench: pinned gate skipped (run sf={sf_val}, "
+            f"pinned sf={pinned_sf})",
+            file=sys.stderr,
+        )
+        pinned = {}
+    prev_sf, prev = _load_times(os.path.join(_REPO, "bench_full.json"))
+    if prev_sf != sf_val:
+        prev = {}
+
+    # Retime baseline: a query's expected cost is the MIN of its pinned
+    # time and its previous recorded time (bench_full.json from the
+    # last run), so either source going stale or contaminated-high is
+    # neutralized because min() falls back to the other; 1.0 when
+    # neither file has the query.
     def _hint(name: str) -> float:
-        h = _COST_HINT.get(name, 1.0)
-        return min(h, prev[name]) if name in prev else h
+        known = [t[name] for t in (pinned, prev) if name in t]
+        return min(known) if known else 1.0
 
     order = sorted(names, key=lambda n: -_hint(n))
     timings: dict[str, float] = {}
@@ -243,7 +269,7 @@ def main() -> None:
         storms (observed: a 93s first measurement on a 10s query) but —
         unlike the old best-of-N — cannot ratchet a genuinely regressed
         query's number down: if all three runs are slow, the reported
-        time is slow. The baseline min(hint, prev) is used for
+        time is slow. The baseline min(pinned, prev) is used for
         DETECTION only, never for reporting.
         """
         t1 = run_once(name)
@@ -292,38 +318,9 @@ def main() -> None:
                 timings[name] = -1.0
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
-    # Per-query regression gate: compare against the PINNED committed
-    # reference (bench_pinned.json, the r5 run) rather than only the
-    # rolling previous run — totals + noise band can't catch a single
-    # query regressing 2× (r5 evidence: classifier_battery +21% went
-    # unflagged). Movers >1.5× are listed in the artifact; steal-time
+    # Movers >1.5× vs pinned are listed in the artifact; steal-time
     # context decides whether they're host noise.
-    pinned: dict[str, float] = {}
-    pinned_sf = None
-    try:
-        with open(os.path.join(_REPO, "bench_pinned.json")) as f:
-            pinned_doc = json.load(f)
-        # older pinned files predate the sf field; they were all sf0.1
-        pinned_sf = pinned_doc.get("sf", 0.1)
-        pinned = {
-            k: v
-            for k, v in pinned_doc.get("queries", {}).items()
-            if isinstance(v, (int, float)) and v > 0
-        }
-    except Exception:  # noqa: BLE001
-        pass
-    if pinned_sf is not None and pinned_sf != sf_val:
-        # timings at a different scale factor are incomparable — a run
-        # at sf0.01 would flag every pinned-sf0.1 query as 'improved'
-        # and any sf1 run as regressed across the board
-        print(
-            f"bench: pinned gate skipped (run sf={sf_val}, "
-            f"pinned sf={pinned_sf})",
-            file=sys.stderr,
-        )
-        pinned = {}
     regressions = {
         n: {"now": timings[n], "pinned": pinned[n],
             "ratio": round(timings[n] / pinned[n], 2)}

@@ -4,11 +4,14 @@ imports, and COVERAGE.md is current."""
 
 from __future__ import annotations
 
+import glob
 import importlib
+import json
 import os
 import sys
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_REPO, "tools"))
 
 from coverage_map import ALL_IDS, COVERAGE, generate_markdown
 from uni_mannheim_masters_thesis_spark.plans.registry import REGISTRY
@@ -44,39 +47,38 @@ def test_non_excluded_ids_have_queries():
 
 
 def test_coverage_md_is_current():
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    with open(os.path.join(repo, "COVERAGE.md")) as f:
+    with open(os.path.join(_REPO, "COVERAGE.md")) as f:
         on_disk = f.read()
     assert on_disk == generate_markdown(), (
         "COVERAGE.md is stale — run `python tools/coverage_map.py`"
     )
 
 
-def test_cumulative_driver_evidence_covers_every_operator():
-    """The driver hashes only the first 50 registry entries per round.
-    Rounds 1-6 checked one fixed window (every query green each round);
-    round 7 rotated the window per the r6 verdict. Every operator must
-    have a query in the UNION of (a) the r1-r6 driver-verified set and
-    (b) the current first-50 window — so cumulative driver artifacts
-    anchor the whole SURVEY §2 + extended inventory."""
-    from uni_mannheim_masters_thesis_spark.plans.registry import (
-        _DRIVER_VERIFIED_R1_R6,
-        _DRIVER_VERIFIED_R7,
-        _DRIVER_VERIFIED_R8,
-        _DRIVER_VERIFIED_R9,
-        _DRIVER_VERIFIED_R10,
-        _DRIVER_VERIFIED_R11,
-    )
+def _driver_green() -> set[str]:
+    """Queries whose LATEST verdict across the committed driver
+    artifacts (``CORRECTNESS_r*.json``, oldest round first) is green:
+    a hash match with no error, or a rows-only query (``no_oracle``)
+    that returned rows. A later red verdict revokes an earlier green."""
+    latest: dict[str, dict] = {}
+    for path in sorted(glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))):
+        with open(path) as f:
+            latest.update(json.load(f))
+    return {
+        name
+        for name, v in latest.items()
+        if (v.get("err") is None and v.get("hash_match") is True)
+        or (v.get("err") == "no_oracle" and (v.get("spark_rows") or 0) > 0)
+    }
 
-    evidenced = (
-        set(list(REGISTRY)[:50])
-        | _DRIVER_VERIFIED_R1_R6
-        | _DRIVER_VERIFIED_R7
-        | _DRIVER_VERIFIED_R8
-        | _DRIVER_VERIFIED_R9
-        | _DRIVER_VERIFIED_R10
-        | _DRIVER_VERIFIED_R11
-    )
+
+def test_cumulative_driver_evidence_covers_every_operator():
+    """The driver checks only the first 50 registry entries per round,
+    and the window has rotated since round 7. Every operator must have
+    a query that is either green in the committed driver artifacts (by
+    latest verdict, ``_driver_green``) or seated in the current
+    first-50 window — so cumulative driver artifacts anchor the whole
+    SURVEY §2 + extended inventory."""
+    evidenced = set(list(REGISTRY)[:50]) | _driver_green()
     # plan_invariant_audit is rows-only by design (never hash-evidenced)
     # and was rotated out of the window per the r8 verdict; its primary
     # evidence is the widened CI twin tests/test_plan_invariants.py,
@@ -94,50 +96,24 @@ def test_cumulative_driver_evidence_covers_every_operator():
 def test_rotated_window_seats_every_unhashed_oracle_query():
     """Rounds 6-10 rotated the window to drain the driver-sample blind
     spot (never-hashed queries got priority). As of round 11 the spot
-    is drained: every oracle-backed query either has a green hash in a
-    past driver artifact (the cumulative _DRIVER_VERIFIED_* sets) or a
-    seat in the current window. Rows-only queries are exempt — hashing
-    them is impossible by design (r8 verdict) and their evidence is the
-    full walk's ok_-invariants."""
-    from uni_mannheim_masters_thesis_spark.plans.registry import (
-        _DRIVER_PRIORITY,
-        _DRIVER_VERIFIED_R1_R6,
-        _DRIVER_VERIFIED_R7,
-        _DRIVER_VERIFIED_R8,
-        _DRIVER_VERIFIED_R9,
-        _DRIVER_VERIFIED_R10,
-        _DRIVER_VERIFIED_R11,
-    )
+    is drained: every oracle-backed query is either green in the
+    committed driver artifacts (by latest verdict, ``_driver_green``)
+    or seated in the current window. Rows-only queries are exempt —
+    hashing them is impossible by design (r8 verdict) and their
+    evidence is the full walk's ok_-invariants."""
+    from uni_mannheim_masters_thesis_spark.plans.registry import _DRIVER_PRIORITY
 
-    hashed_ever = set(
-        _DRIVER_VERIFIED_R1_R6
-        | _DRIVER_VERIFIED_R7
-        | _DRIVER_VERIFIED_R8
-        | _DRIVER_VERIFIED_R9
-        | _DRIVER_VERIFIED_R10
-        | _DRIVER_VERIFIED_R11
-    )
-    # The frozensets track the rotation bookkeeping; the committed
-    # driver artifacts are the ground truth (r1-r6 reran one fixed
-    # window each round, so the R1_R6 set lists only its final shape).
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        with open(path) as f:
-            hashed_ever.update(json.load(f).keys())
+    green = _driver_green()
     unseated = [
         name
         for name, spec in REGISTRY.items()
         if spec.sql is not None
-        and name not in hashed_ever
+        and name not in green
         and name not in _DRIVER_PRIORITY
     ]
     assert not unseated, (
-        f"oracle-backed queries with neither a past driver hash nor a "
-        f"window seat: {unseated}"
+        f"oracle-backed queries with neither a green driver verdict nor "
+        f"a window seat: {unseated}"
     )
 
 

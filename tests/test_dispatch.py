@@ -244,3 +244,45 @@ def test_bounded_collect_is_one_job(spark):
     assert over is None and jobs == 1
     off, jobs = jobs_launched(spark, lambda: dispatch.bounded_collect(df, 0))
     assert off is None and jobs == 0
+
+
+def test_lexicon_inline_matches_join(spark, monkeypatch, decisions):
+    """``filter_tokens_with_lexicon(strategy='auto')``: the inline and
+    join strategies keep the same tokens in both modes (order,
+    multiplicity and NULL handling included), and the size decision
+    plus the word read is one bounded collect: at most one job."""
+    from uni_mannheim_masters_thesis_spark.functions import lexicon as L
+
+    lex = spark.createDataFrame(
+        [("the",), ("a",), ("the",), (None,), ("of",)], "word string"
+    ).localCheckpoint(eager=True)
+    df = spark.createDataFrame(
+        [
+            (0, ["the", "cat", "of", "the", "hat", "cat"]),
+            (1, ["a", None, "b", "a"]),
+            (2, []),
+            (3, None),
+        ],
+        "doc_id int, tokens array<string>",
+    )
+
+    def run(budget):
+        monkeypatch.setattr(L, "INLINE_LEXICON_MAX", budget)
+        out = []
+        for mode in ("drop", "keep"):
+            res, jobs = jobs_launched(
+                spark,
+                lambda: L.filter_tokens_with_lexicon(
+                    df, "tokens", lex, ["doc_id"], mode=mode
+                ),
+            )
+            assert jobs <= 1, (budget, mode, jobs)
+            out.append(sorted(map(tuple, res.collect())))
+        return out
+
+    inline = run(5)  # the boundary: 5 raw rows fit a budget of 5
+    assert [went_local for _, went_local, _ in decisions] == [True, True]
+    joined = run(4)
+    assert [went_local for _, went_local, _ in decisions[2:]] == [False, False]
+    assert inline == joined
+    assert inline[0][0] == (0, ["cat", "hat", "cat"])

@@ -175,3 +175,20 @@ def test_partition_determinism(determinism_results, name):
     assert not determinism_results[name], (
         f"{name} not partition-deterministic: {determinism_results[name]}"
     )
+
+
+def test_important_parts_share_exact_at_bench_scale(spark):
+    """sf0.1 holds per-part DECIMAL sums that sit exactly on a cents
+    tie (part 14041: 2275637.9050). Rounding the double cast of such a
+    value splits the engines — DuckDB rounds the binary double
+    (…904999 -> .90), Spark its shortest decimal string (…905 -> .91) —
+    so ``part_value`` must round the DECIMAL before the cast. The
+    sf0.001 / sf0.01 gate holds no such tie."""
+    from oracle_harness import duckdb_connection
+
+    sf_dir = "/root/testdata/sf0.1"
+    name = "important_parts_share"
+    _, _, problems = run_query(
+        spark, duckdb_connection(sf_dir), name, REGISTRY[name], sf_dir
+    )
+    assert not problems, problems

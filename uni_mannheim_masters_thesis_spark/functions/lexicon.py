@@ -35,6 +35,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import dispatch
+
 # Above this many words, an inline literal array stops being a sane plan
 # node (plan size, task-binary broadcast) and the join strategy wins.
 INLINE_LEXICON_MAX = 10_000
@@ -52,11 +54,9 @@ def lexicon_from_words(spark: SparkSession, words: Iterable[str]) -> DataFrame:
     )
 
 
-def _lexicon_words(lexicon: DataFrame) -> list[str]:
-    col = lexicon.columns[0]
-    return sorted(
-        r[0] for r in lexicon.select(col).distinct().collect() if r[0] is not None
-    )
+def _words(rows) -> list[str]:
+    """Sorted, distinct, non-NULL words from a lexicon's rows."""
+    return sorted({r[0] for r in rows if r[0] is not None})
 
 
 def filter_tokens_inline(
@@ -122,26 +122,31 @@ def filter_tokens_with_lexicon(
     ``id_cols`` must uniquely identify rows (needed by the join
     strategy's regroup; the inline strategy ignores them).
 
-    ``strategy='auto'`` counts the lexicon once and picks ``inline``
-    below :data:`INLINE_LEXICON_MAX` words, ``join`` above.
+    ``strategy='auto'`` reads the lexicon once through
+    :func:`operators.dispatch.bounded_collect` (one job) and picks
+    ``inline`` when it holds at most :data:`INLINE_LEXICON_MAX` rows,
+    ``join`` above.
     """
     if mode not in ("drop", "keep"):
         raise ValueError(f"mode must be 'drop' or 'keep', got {mode!r}")
     out_col = out_col or tokens_col
+    word_col = lexicon.columns[0]
+    rows = None
     if strategy == "auto":
-        strategy = (
-            "inline" if lexicon.limit(INLINE_LEXICON_MAX + 1).count() <= INLINE_LEXICON_MAX else "join"
+        rows = dispatch.bounded_collect(
+            lexicon.select(word_col), INLINE_LEXICON_MAX
         )
+        strategy = "join" if rows is None else "inline"
+    elif strategy == "inline":
+        rows = lexicon.select(word_col).collect()
 
     if strategy == "inline":
-        words = _lexicon_words(lexicon)
         return df.withColumn(
-            out_col, filter_tokens_inline(F.col(tokens_col), words, mode)
+            out_col, filter_tokens_inline(F.col(tokens_col), _words(rows), mode)
         )
     if strategy != "join":
         raise ValueError(f"strategy must be auto|inline|join, got {strategy!r}")
 
-    word_col = lexicon.columns[0]
     lex = F.broadcast(
         lexicon.select(F.col(word_col).alias("__lex_word")).distinct()
     )

@@ -281,6 +281,8 @@ def rff_exact_sweep(
 
 REF_SVM_GAMMAS = (0.1, 1.0, 10.0, 100.0)
 REF_SVM_DEGREES = (0, 1, 2, 3, 4, 5, 6)
+#: concurrent fits in ``kernel_svm_sweep``'s pool (see the width note there)
+_SWEEP_POOL = 4
 
 
 def _poly_combos(dim: int, degree: int):
@@ -486,19 +488,11 @@ def sweep_prep(
 
     # settle every cache up front (concurrently) so racing fits never
     # trigger duplicate materialization of one frame
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _t_settle = _time.time()
     with ThreadPoolExecutor(max_workers=4) as ex:
         list(ex.map(
             lambda fr: fr.count(),
             [f for pair in frames.values() for f in pair],
         ))
-    if _os.environ.get("SPARK_GRAFT_PROF"):
-        print(f"[prof] sweep prep settle: {_time.time() - _t_settle:.2f}s",
-              file=_sys.stderr)
 
     return {
         "dim": dim,
@@ -610,23 +604,7 @@ def kernel_svm_sweep(
     Xtr, ytr, Xte, yte = prepared["slices"]
     s2_by_degree = prepared["s2_by_degree"]
 
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _prof = bool(_os.environ.get("SPARK_GRAFT_PROF"))
-
     def fit_task(key):
-        if _prof:
-            _t0 = _time.time()
-            try:
-                return _fit_task_inner(key)
-            finally:
-                print(f"[prof] fit {key}: {_time.time() - _t0:.2f}s",
-                      file=_sys.stderr)
-        return _fit_task_inner(key)
-
-    def _fit_task_inner(key):
         kernel = key[0]
         if kernel == "linear":
             mdl = LinearSVC(maxIter=max_iter, regParam=reg_param).fit(train)
@@ -724,9 +702,8 @@ def kernel_svm_sweep(
     # pre-JIT fits thrash the compiler (in-bench first run 325 s at
     # width 8 vs 23-75 s at width 4 — the same interpreted-wave
     # pathology the SPT ordering exists for, squared). The bench and
-    # any fresh session hit the cold path first, so the default stays
-    # at the JIT-safe 4; the knob is for long-lived warm sessions.
-    pool_w = int(_os.environ.get("SPARK_GRAFT_SWEEP_POOL", "4"))
+    # any fresh session hit the cold path first, so the width stays at
+    # the JIT-safe _SWEEP_POOL.
     def _record(key, res):
         if key == ("poly", None, 0):
             for g in gammas:
@@ -741,7 +718,7 @@ def kernel_svm_sweep(
 
     try:
         _record(*fit_task(prewarm))
-        with ThreadPoolExecutor(max_workers=pool_w) as ex:
+        with ThreadPoolExecutor(max_workers=_SWEEP_POOL) as ex:
             for key, res in ex.map(fit_task, tasks):
                 _record(key, res)
     finally:

@@ -3122,7 +3122,7 @@ def q_national_market_share(
     ),
     tot AS (SELECT SUM(v) AS t, COUNT(*) AS n FROM pv)
     SELECT l_partkey AS partkey,
-           ROUND(CAST(v AS DOUBLE), 2) AS part_value,
+           CAST(ROUND(v, 2) AS DOUBLE) AS part_value,
            FLOOR(CAST(v AS DOUBLE) / CAST(t AS DOUBLE) * 100000000 + 0.5)
                / 100000000 AS value_share
     FROM pv, tot
@@ -3137,7 +3137,9 @@ def q_national_market_share(
     "fact scan) cross-joined back as a broadcast — the scalar never "
     "shuffles the cells again. The admission comparison runs on the "
     "bit-identical doubles both engines derive from exact DECIMAL "
-    "sums, so the boundary part set is hash-stable; shares are "
+    "sums, so the boundary part set is hash-stable; part values are "
+    "rounded to cents on the exact DECIMAL before the double cast (a "
+    "double-side round splits the engines on cents ties); shares are "
     "quantized mode-free at 1e-8. The admission threshold is relative "
     "(1.5x the average part share), so the result is non-degenerate at "
     "every scale factor — Q11's absolute fraction empties out below "
@@ -3162,7 +3164,7 @@ def q_important_parts_share(
         )
         .select(
             F.col("l_partkey").alias("partkey"),
-            F.round(F.col("v").cast("double"), 2).alias("part_value"),
+            F.round(F.col("v"), 2).cast("double").alias("part_value"),
             (
                 F.floor(
                     F.col("v").cast("double")
