@@ -12,12 +12,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("UMT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# The suite invokes kernel_svm_sweep from several tests; keep the
-# session-shared prep bundle across them (the bench's retime convention)
-# instead of paying the release-by-default rebuild per invocation. The
-# release-path test monkeypatches this off for its own scope.
-os.environ.setdefault("SPARK_GRAFT_SWEEP_PREP_KEEP", "1")
-
 
 @pytest.fixture(scope="session")
 def spark():

@@ -22,7 +22,9 @@ window, each drain owns a unique checkpoint dir + memory-sink name,
 and the table builders publish through the staged-rename protocol.
 The catalog-writing bucketed join runs strictly serially. DuckDB work
 uses one cursor per worker; shared ML artifact builds are serialized
-by ``ml.shared.BUILD_LOCK``.
+by ``ml.shared.memo``. Each fixture computes only the names the
+session collected for its test function, so a ``-k`` selection runs
+only the queries it asserts.
 """
 
 from __future__ import annotations
@@ -57,6 +59,16 @@ def _bucket(name: str) -> str:
     return "batch"
 
 
+def _collected(request, test_fn) -> list[str]:
+    """The query names this session collected for ``test_fn``, so a
+    ``-k`` selection computes only the queries it asserts."""
+    return [
+        item.callspec.params["name"]
+        for item in request.session.items
+        if getattr(item, "function", None) is test_fn
+    ]
+
+
 def _run_family(names, task) -> dict[str, list[str]]:
     """name -> problems list; exceptions become problem strings so one
     bad query fails its own test instead of the whole fixture."""
@@ -80,7 +92,7 @@ def _run_family(names, task) -> dict[str, list[str]]:
 
 
 @pytest.fixture(scope="module")
-def parity_results(spark, duck):
+def parity_results(request, spark, duck):
     def task(name):
         cur = duck.cursor()
         try:
@@ -91,7 +103,7 @@ def parity_results(spark, duck):
         finally:
             cur.close()
 
-    return _run_family(ORACLE_QUERIES, task)
+    return _run_family(_collected(request, test_oracle_parity), task)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
@@ -100,7 +112,7 @@ def test_oracle_parity(parity_results, name):
 
 
 @pytest.fixture(scope="module")
-def rows_only_results(spark, duck):
+def rows_only_results(request, spark, duck):
     def task(name):
         cur = duck.cursor()
         try:
@@ -117,7 +129,7 @@ def rows_only_results(spark, duck):
         finally:
             cur.close()
 
-    return _run_family(ROWS_ONLY_QUERIES, task)
+    return _run_family(_collected(request, test_rows_only_runs), task)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
@@ -155,7 +167,7 @@ def determinism_sessions(spark):
 
 
 @pytest.fixture(scope="module")
-def determinism_results(determinism_sessions):
+def determinism_results(request, determinism_sessions):
     s_lo, s_hi = determinism_sessions
 
     def task(name):
@@ -167,7 +179,7 @@ def determinism_results(determinism_sessions):
         fn = REGISTRY[name].fn
         return compare(fn(s_lo, SF_DIR).toPandas(), fn(s_hi, SF_DIR).toPandas())
 
-    return _run_family(ORACLE_QUERIES, task)
+    return _run_family(_collected(request, test_partition_determinism), task)
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)

@@ -435,3 +435,16 @@ def test_kernel_sweep_identical_fit_memoization_is_sound(spark):
         assert a["feat_dim"] == b["feat_dim"]
     assert all(r["ok_grid_complete"] for r in out)
 
+    # 3) degree 0 (K ≡ 1) is the train-majority predictor in closed
+    #    form: every test row gets the train majority, scored by F1
+    majority = 1.0 if 2 * y[:120].sum() > 120 else 0.0
+    gold = y[120:] == 1.0
+    tp = float(np.sum(gold)) if majority else 0.0
+    fp = float(np.sum(~gold)) if majority else 0.0
+    fn = float(np.sum(gold)) - tp
+    f1 = 2 * tp / (2 * tp + fp + fn) if tp else 0.0
+    for g in (10.0, 100.0):
+        r = rows[("poly", g, 0)]
+        assert r["feat_dim"] == 1
+        assert r["f1"] == pytest.approx(f1, abs=1e-6)
+

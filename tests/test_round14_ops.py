@@ -169,22 +169,20 @@ def test_lda_k_sweep_pooled_fits_match_serial(spark):
     assert serial == pooled  # bit-identical perplexities
 
 
-def test_sweep_prep_released_after_kernel_svm_sweep_query(
-    spark, monkeypatch
-):
-    """r13 verdict item 6: q_kernel_svm_sweep must release the
-    session-shared prep bundle (20 cached frames) in its epilogue
-    unless SPARK_GRAFT_SWEEP_PREP_KEEP=1 opts in to keeping it."""
-    from uni_mannheim_masters_thesis_spark.ml import shared as MS
-    from uni_mannheim_masters_thesis_spark.ml.kernel import sweep_prep
-
-    monkeypatch.delenv("SPARK_GRAFT_SWEEP_PREP_KEEP", raising=False)
-
-    # a tiny synthetic prep bundle standing in for the session-shared
-    # one (building the real sf bundle is a multi-second fit pipeline;
-    # the epilogue logic only needs the cache key + release calls)
+def test_sweep_prep_release_uncaches_every_frame(spark):
+    """``sweep_prep_release`` (what ``kernel_svm_sweep(prepared=None)``
+    runs on its own bundle) unpersists every cached frame of a
+    :func:`sweep_prep` bundle, the feature frames and the array
+    frames alike."""
     from pyspark.ml.functions import array_to_vector
 
+    from uni_mannheim_masters_thesis_spark.ml.kernel import (
+        sweep_prep,
+        sweep_prep_release,
+    )
+
+    # a tiny synthetic bundle (the real sf bundle is a multi-second fit
+    # pipeline; release only needs the frames)
     rng = np.random.RandomState(0)
     X = rng.normal(size=(60, 3))
     y = (X[:, 0] > 0).astype(float)
@@ -193,27 +191,14 @@ def test_sweep_prep_released_after_kernel_svm_sweep_query(
         "xarr array<double>, label double",
     ).select(array_to_vector("xarr").alias("features"), "label")
     train, test = mk(X[:40], y[:40]), mk(X[40:], y[40:])
-    prep = sweep_prep(train, test, gammas=(1.0,), degrees=(0, 1), n_rff=8)
+    prep = sweep_prep(train, test, gammas=(1.0,), degrees=(1, 2), n_rff=8)
+    frames = [f for pair in prep["frames"].values() for f in pair]
+    frames += list(prep["arr_frames"])
+    assert all(f.storageLevel.useMemory for f in frames)
 
-    sf_key = "/nonexistent_sf_dir_r14_test"
-    ck = MS._key(spark, sf_key, "kernel_sweep_prep")
-    MS._CACHE[ck] = prep
+    sweep_prep_release(prep)
 
-    # replicate the query epilogue (q_ml.q_kernel_svm_sweep tail)
-    import os
-
-    if os.environ.get("SPARK_GRAFT_SWEEP_PREP_KEEP", "0") != "1":
-        from uni_mannheim_masters_thesis_spark.ml.kernel import (
-            sweep_prep_release,
+    for f in frames:
+        assert f.storageLevel.useMemory is False, (
+            "a sweep-prep frame stayed cached after release"
         )
-
-        got = MS._CACHE.pop(ck, None)
-        assert got is not None
-        sweep_prep_release(got)
-
-    assert ck not in MS._CACHE or MS._CACHE.get(ck) is None
-    for pair in prep["frames"].values():
-        for f in pair:
-            assert f.storageLevel.useMemory is False, (
-                "a sweep-prep frame stayed cached after release"
-            )

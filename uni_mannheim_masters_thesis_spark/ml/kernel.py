@@ -388,8 +388,8 @@ def sweep_prep(
 ) -> dict:
     """Build (and settle) every input artifact the 33-config sweep
     needs: the per-γ RFF feature frames, the per-degree exact poly
-    expansions, the constant degree-0 frame, the driver slices feeding
-    the exact-kernel bounds, and the degree-conditioning constants.
+    expansions (degrees ≥ 1), the driver slices feeding the
+    exact-kernel bounds, and the degree-conditioning constants.
 
     Split out of :func:`kernel_svm_sweep` so a session can build these
     ONCE (``ml.shared.shared_kernel_sweep_prep``) and amortize them
@@ -459,11 +459,6 @@ def sweep_prep(
             .cache()
             for a in (arr_train, arr_test)
         )
-    const = F.array(F.lit(1.0))
-    frames[("poly", 0)] = (
-        train.select(array_to_vector(const).alias("features"), "label"),
-        test.select(array_to_vector(const).alias("features"), "label"),
-    )
     # conditioning: ||phi(x)||^2 = (x·x)^d EXACTLY (the multinomial
     # identity at y=x), so the typical feature-block norm is known from
     # the driver slice without a distributed pass — store psi = phi/s
@@ -474,9 +469,7 @@ def sweep_prep(
         d: float(np.mean(np.sum(Xtr * Xtr, axis=1) ** d))
         for d in degrees if d > 0
     }
-    for d in degrees:
-        if d == 0:
-            continue
+    for d in (d for d in degrees if d > 0):
         frames[("poly", int(d))] = tuple(
             poly_features(_spread(a, len(_poly_combos(dim, d)[0])),
                           in_col="xarr", out_col="p", degree=d,
@@ -551,9 +544,11 @@ def kernel_svm_sweep(
       configs are four cheap fits on the cached frame
       (tests/test_round13_ops.py pins the fold differentially).
       Degree 0 is the constant kernel K≡1 (sklearn coef0=0): the map
-      is the single constant feature, LinearSVC degenerates to the
-      majority-sign predictor, and the row is γ-invariant by
-      construction.
+      is the single constant feature, on which LinearSVC can only learn
+      a sign, so the row is computed in closed form — predict the train
+      majority class for every test row (a tie predicts 0.0, as a zero
+      margin does) and score it with the same ``evaluate_binary``. The
+      row is γ-invariant by construction.
 
     The returned report stamps hard rows-only invariants:
     ok_grid_complete (exactly the reference's 33-config grid),
@@ -577,12 +572,21 @@ def kernel_svm_sweep(
     # keyed (kernel, gamma, degree) -> (feat_dim, f1, mean_gram_err,
     # f1_exact_kernel); assembled into reference loop order at the end
     results: dict[tuple, tuple] = {}
+    if 0 in degrees:
+        # K ≡ 1 in closed form (see docstring): the train majority
+        n_pos = train.filter(F.col("label") == 1.0).count()
+        majority = 1.0 if 2 * n_pos > train.count() else 0.0
+        f1_const = float(evaluate_binary(
+            test.select("label", F.lit(majority).alias("prediction"))
+        ).first()["f1"])
+        for g in gammas:
+            results[("poly", float(g), 0)] = (1, f1_const, None, None)
 
     # Stage 1 — the prep bundle: every feature frame (one RFF map per
-    # γ, one exact poly expansion per degree, the constant degree-0
-    # map), cached and settled, plus the driver slices and conditioning
-    # constants (see :func:`sweep_prep`; a session-shared bundle skips
-    # the whole stage on repeat invocations). Stage 2 — run all 30 fits
+    # γ, one exact poly expansion per degree ≥ 1), cached and settled,
+    # plus the driver slices and conditioning constants (see
+    # :func:`sweep_prep`; a session-shared bundle skips the whole stage
+    # on repeat invocations). Stage 2 — run every fit
     # through ONE bounded thread pool: the configs are independent,
     # MLlib fits run in the JVM and release the GIL (CrossValidator's
     # own parallelism pattern). The pool is SMALL (guide §2.6: "2-3
@@ -619,13 +623,6 @@ def kernel_svm_sweep(
                          b["mean_gram_err"], b["f1_exact_kernel"])
         g, d = key[1], key[2]
         tr, te = frames[("poly", d)]
-        if d == 0:
-            # K ≡ 1: the constant-feature map; LinearSVC degenerates to
-            # the majority-sign predictor and the row is γ-invariant
-            mdl = LinearSVC(
-                maxIter=5, regParam=reg_param, standardization=False
-            ).fit(tr)
-            return key, (1, f1_of(mdl, te), None, None)
         # exact γ fold: the target model is (γ^{d/2}·phi, regParam); on
         # the stored psi = phi/s the SAME predictions come from
         # regParam/(γ^d·s^2) (substitute u = γ^{d/2}·s·w; intercept
@@ -644,8 +641,6 @@ def kernel_svm_sweep(
 
     tasks: list[tuple] = [("linear", None, None)]
     tasks += [("rbf", float(g), None) for g in gammas]
-    # degree 0 fits once (γ-invariant); degrees ≥ 1 fit per γ
-    tasks += [("poly", None, 0)]
     # Identical-fit memoization (guide §1.2 "don't compute things you
     # throw away"): the exact γ-fold maps each poly config to
     # rp = max(regParam/(γ^d·s2_d), 1e-10) on the SAME cached frame —
@@ -681,18 +676,18 @@ def kernel_svm_sweep(
     # shared), with the 1-partition rbf/linear fits measured around the
     # d4-width cost. Deterministic, affects scheduling only.
     def _cost(key) -> float:
-        if key[0] == "poly" and key[2]:
+        if key[0] == "poly":
             return float(len(_poly_combos(dim, key[2])[0]))
-        return 1100.0 if key[0] in ("rbf", "linear") else 500.0
+        return 1100.0
 
     tasks.sort(key=_cost)
     # Serial JIT pre-warm (guide §1.2 order-of-operations, r13): even
     # with SPT ordering, a cold pool's FIRST WAVE is N interpreted
     # LinearSVC/OWLQN fits competing for the JIT compiler — measured
     # in-bench first runs of 325 s (width 8) / 65-124 s (width 4)
-    # against ~20 s warm. Running the cheapest task (the constant
-    # degree-0 fit, ~2 s) to completion BEFORE the pool opens compiles
-    # the whole fit/transform/evaluate path once, so the wave runs
+    # against ~20 s warm. Running the cheapest task (the width-``dim``
+    # degree-1 fit) to completion BEFORE the pool opens compiles the
+    # whole fit/transform/evaluate path once, so the wave runs
     # compiled. Same fits, same results — scheduling only.
     prewarm = tasks.pop(0)
     # pool width: each fit is ~20 sequential sub-100ms OWLQN barrier
@@ -705,10 +700,7 @@ def kernel_svm_sweep(
     # any fresh session hit the cold path first, so the width stays at
     # the JIT-safe _SWEEP_POOL.
     def _record(key, res):
-        if key == ("poly", None, 0):
-            for g in gammas:
-                results[("poly", float(g), 0)] = res
-        elif key[0] == "poly":
+        if key[0] == "poly":
             # share the representative fit's row with every config in
             # its identical-(degree, rp) group
             for member in rp_groups[(key[2], _poly_rp(key[1], key[2]))]:

@@ -8,10 +8,14 @@ corpus, and M25/M26 evaluate the *same* LDA fit in the reference
 (``coherence_log_perplexity.py:36-55`` scores one saved model with both
 metrics). Re-fitting per query would triple the wall-clock of the
 correctness/bench run without changing any result, so shared artifacts
-are memoized here per (Spark application, sf_dir, params).
+are memoized here per (SparkSession, sf_dir, params) through
+:func:`memo` — the one memo every session-shared artifact goes through.
 
-Cache keys include ``applicationId`` so a fresh session (new JVM, new
-test run) never sees another session's cached DataFrames. Entries hold
+Keys hold the ``SparkSession`` object itself (it hashes by identity),
+so a fresh session never sees another session's cached DataFrames —
+not even a ``spark.newSession()`` sibling on the same SparkContext,
+which is what lets the 3-vs-64 shuffle-partition determinism gate
+exercise every shared build under both partition counts. Entries hold
 cached DataFrames / fitted models only — all deterministic given the
 seed, so sharing is observationally equivalent to re-fitting.
 """
@@ -20,68 +24,44 @@ from __future__ import annotations
 
 import threading
 import time
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: Serializes shared-artifact builds across driver threads (r14: the
-#: test harness runs independent queries through a thread pool — guide
-#: §2.6 — and two simultaneous cache misses would otherwise both build
-#: the same multi-second artifact). Reentrant because builders nest
-#: (shared_lda -> shared_corpus). Held only around the miss-check +
-#: build; steady-state readers pay one uncontended acquire.
+T = TypeVar("T")
+
+#: Serializes shared-artifact builds across driver threads (the test
+#: harness runs independent queries through a thread pool, and two
+#: simultaneous cache misses would otherwise both build the same
+#: multi-second artifact). Reentrant because builds nest (a build may
+#: call :func:`memo` for its own upstream artifact). Steady-state
+#: readers pay one uncontended acquire.
 BUILD_LOCK = threading.RLock()
 
-
-def _locked(fn):
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        with BUILD_LOCK:
-            return fn(*args, **kwargs)
-
-    return wrapper
-
-
-class _TimedCache(dict):
-    """Build-wall accounting for the shared-artifact cache (r12 verdict
-    item 5: bench numbers for queries riding session-shared memoized
-    builds should be readable next to the build cost they amortize,
-    so a 0.02 s warm wall is never mistaken for per-query cost).
-
-    Every builder follows ``if key not in _CACHE: ... _CACHE[key] =``,
-    so a miss observed via ``in`` stamps the build start and the
-    subsequent insert records the INCLUSIVE wall (nested shared builds
-    count inside their parent) in :data:`BUILD_WALLS` under the key's
-    tag. Pure observability — lookup/insert semantics are unchanged.
-    """
-
-    def __contains__(self, key) -> bool:  # noqa: D105
-        present = super().__contains__(key)
-        if not present:
-            _BUILD_T0[key] = time.time()
-        return present
-
-    def __setitem__(self, key, value) -> None:  # noqa: D105
-        t0 = _BUILD_T0.pop(key, None)
-        if t0 is not None and not super().__contains__(key):
-            BUILD_WALLS[str(key[2])] = round(time.time() - t0, 3)
-        super().__setitem__(key, value)
-
-
-_CACHE: dict[tuple, object] = _TimedCache()
-_BUILD_T0: dict[tuple, float] = {}
-#: tag -> inclusive build seconds, filled the first time a session
-#: builds each shared artifact (bench.py exports it as shared_build_s)
+_CACHE: dict[tuple, object] = {}
+#: tag -> inclusive wall of the tag's latest build() (nested shared
+#: builds count inside their parent; bench.py exports it as
+#: shared_build_s, perfbench counts new entries as ml.shared_builds)
 BUILD_WALLS: dict[str, float] = {}
 
 
-def _key(spark: SparkSession, sf_dir: str, tag: str) -> tuple:
-    return (spark.sparkContext.applicationId, sf_dir.rstrip("/"), tag)
+def memo(
+    spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], T]
+) -> T:
+    """``build()`` once per (session, sf_dir, tag); every later call in
+    that session returns the same object. The miss-check, build and
+    insert run under :data:`BUILD_LOCK`, so concurrent first calls build
+    once, and the build's wall lands in ``BUILD_WALLS[tag]``."""
+    key = (spark, sf_dir.rstrip("/"), tag)
+    with BUILD_LOCK:
+        if key not in _CACHE:
+            t0 = time.time()
+            _CACHE[key] = build()
+            BUILD_WALLS[tag] = round(time.time() - t0, 3)
+        return _CACHE[key]
 
 
-@_locked
 def shared_corpus(
     spark: SparkSession, sf_dir: str, vocab_size: int = 1 << 16
 ):
@@ -94,18 +74,17 @@ def shared_corpus(
     from ..sources.testdata import load_table
     from .topics import vectorize
 
-    key = _key(spark, sf_dir, f"corpus/{vocab_size}")
-    if key not in _CACHE:
+    def build():
         docs = load_table(spark, sf_dir, "documents")
         toks = docs.select(
             "doc_id", tokens_pipeline(F.col("text")).alias("tokens")
         ).filter(F.size("tokens") > 0)
         model, corpus = vectorize(toks, vocab_size=vocab_size)
-        _CACHE[key] = (model, corpus.cache())
-    return _CACHE[key]
+        return model, corpus.cache()
+
+    return memo(spark, sf_dir, f"corpus/{vocab_size}", build)
 
 
-@_locked
 def shared_lda(
     spark: SparkSession,
     sf_dir: str,
@@ -120,13 +99,13 @@ def shared_lda(
     from .topics import fit_lda
 
     _, corpus = shared_corpus(spark, sf_dir, vocab_size)
-    key = _key(spark, sf_dir, f"lda/{vocab_size}/{k}/{max_iter}")
-    if key not in _CACHE:
-        _CACHE[key] = fit_lda(corpus, k=k, max_iter=max_iter)
-    return _CACHE[key], corpus
+    model = memo(
+        spark, sf_dir, f"lda/{vocab_size}/{k}/{max_iter}",
+        lambda: fit_lda(corpus, k=k, max_iter=max_iter),
+    )
+    return model, corpus
 
 
-@_locked
 def shared_embedding_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings → MLlib features + binary label (cached).
 
@@ -137,21 +116,19 @@ def shared_embedding_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.testdata import load_table
 
-    key = _key(spark, sf_dir, "emb_features")
-    if key not in _CACHE:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
-        df = emb.select(
+        return emb.select(
             "vec_id",
             array_to_vector(F.col("embedding").cast("array<double>")).alias(
                 "features"
             ),
             (F.col("label") < 5).cast("double").alias("label"),
-        )
-        _CACHE[key] = df.cache()
-    return _CACHE[key]
+        ).cache()
+
+    return memo(spark, sf_dir, "emb_features", build)
 
 
-@_locked
 def shared_doc_feature_table(
     spark: SparkSession, sf_dir: str, k: int = 10, max_iter: int = 5
 ) -> DataFrame:
@@ -160,13 +137,14 @@ def shared_doc_feature_table(
     classifier battery and any consumer that scores document features."""
     from ..plans.supervised import build_feature_table
 
-    key = _key(spark, sf_dir, f"doc_features/{k}/{max_iter}")
-    if key not in _CACHE:
-        _CACHE[key] = build_feature_table(spark, sf_dir, k=k, max_iter=max_iter).cache()
-    return _CACHE[key]
+    return memo(
+        spark, sf_dir, f"doc_features/{k}/{max_iter}",
+        lambda: build_feature_table(
+            spark, sf_dir, k=k, max_iter=max_iter
+        ).cache(),
+    )
 
 
-@_locked
 def shared_scaled_doc_split(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -178,22 +156,18 @@ def shared_scaled_doc_split(
     train rows."""
     from .classify import scale_features, train_test_split
 
-    key = _key(spark, sf_dir, "doc_split_scaled")
-    if key not in _CACHE:
+    def build():
         data = shared_doc_feature_table(spark, sf_dir)
-        train, test = train_test_split(data)
-        train, test = scale_features(train, test)
-        train = train.select(
-            F.col("features_scaled").alias("features"), "label"
-        ).cache()
-        test = test.select(
-            F.col("features_scaled").alias("features"), "label"
-        ).cache()
-        _CACHE[key] = (train, test)
-    return _CACHE[key]
+        train, test = scale_features(*train_test_split(data))
+        return tuple(
+            df.select(F.col("features_scaled").alias("features"), "label")
+            .cache()
+            for df in (train, test)
+        )
+
+    return memo(spark, sf_dir, "doc_split_scaled", build)
 
 
-@_locked
 def shared_kernel_sweep_prep(spark: SparkSession, sf_dir: str) -> dict:
     """Session-shared :func:`ml.kernel.sweep_prep` bundle over the
     shared scaled split — the cached per-γ RFF frames, per-degree exact
@@ -204,14 +178,12 @@ def shared_kernel_sweep_prep(spark: SparkSession, sf_dir: str) -> dict:
     (only inputs are shared, never results)."""
     from .kernel import sweep_prep
 
-    key = _key(spark, sf_dir, "kernel_sweep_prep")
-    if key not in _CACHE:
-        train, test = shared_scaled_doc_split(spark, sf_dir)
-        _CACHE[key] = sweep_prep(train, test)
-    return _CACHE[key]
+    return memo(
+        spark, sf_dir, "kernel_sweep_prep",
+        lambda: sweep_prep(*shared_scaled_doc_split(spark, sf_dir)),
+    )
 
 
-@_locked
 def shared_mlp_blocks(spark: SparkSession, sf_dir: str):
     """Cached numpy-block RDD form of the shared scaled split (the
     adaptive_search_mlp objective's input): ((blocks, n, dim) train,
@@ -219,14 +191,14 @@ def shared_mlp_blocks(spark: SparkSession, sf_dir: str):
     shared split."""
     from .mlp import mlp_blocks
 
-    key = _key(spark, sf_dir, "mlp_blocks")
-    if key not in _CACHE:
-        train, test = shared_scaled_doc_split(spark, sf_dir)
-        _CACHE[key] = (mlp_blocks(train), mlp_blocks(test))
-    return _CACHE[key]
+    return memo(
+        spark, sf_dir, "mlp_blocks",
+        lambda: tuple(
+            mlp_blocks(df) for df in shared_scaled_doc_split(spark, sf_dir)
+        ),
+    )
 
 
-@_locked
 def shared_pq(spark: SparkSession, sf_dir: str, m: int = 8, k: int = 16,
               iters: int = 2):
     """Quantized embedding frame (cached) + per-subspace PQ codebooks —
@@ -235,13 +207,10 @@ def shared_pq(spark: SparkSession, sf_dir: str, m: int = 8, k: int = 16,
     subspace and runs once per session. Deterministic per the integer
     Lloyd contract in ml.cluster, so sharing is observationally
     equivalent to retraining."""
-    from pyspark.sql import functions as F
-
     from ..sources.testdata import load_table
     from .cluster import PQ_TRAIN_SAMPLE_CAP, pq_train_rows, quantize_vectors
 
-    key = _key(spark, sf_dir, f"pq/{m}/{k}/{iters}")
-    if key not in _CACHE:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         quant = quantize_vectors(emb).cache()
         # ONE bounded collect (also materializes the cache) feeds both
@@ -252,12 +221,11 @@ def shared_pq(spark: SparkSession, sf_dir: str, m: int = 8, k: int = 16,
             quant.filter(F.col("vec_id") < PQ_TRAIN_SAMPLE_CAP).collect(),
             key=lambda r: int(r["vec_id"]),
         )
-        _CACHE[key] = (quant, pq_train_rows(sample, m=m, k=k, iters=iters),
-                       sample)
-    return _CACHE[key]
+        return quant, pq_train_rows(sample, m=m, k=k, iters=iters), sample
+
+    return memo(spark, sf_dir, f"pq/{m}/{k}/{iters}", build)
 
 
-@_locked
 def shared_pq_codes(spark: SparkSession, sf_dir: str, m: int = 8,
                     k: int = 16, iters: int = 2):
     """The full-corpus PQ code table (vec_id, code0..code{m-1}, qerr_q),
@@ -268,16 +236,13 @@ def shared_pq_codes(spark: SparkSession, sf_dir: str, m: int = 8,
     shape where codes are a materialized artifact)."""
     from .cluster import pq_codes_projection
 
-    key = _key(spark, sf_dir, f"pq_codes/{m}/{k}/{iters}")
-    if key not in _CACHE:
+    def build():
         quant, books, _sample = shared_pq(spark, sf_dir, m=m, k=k, iters=iters)
-        _CACHE[key] = pq_codes_projection(
-            quant, books, with_qerr=True
-        ).cache()
-    return _CACHE[key]
+        return pq_codes_projection(quant, books, with_qerr=True).cache()
+
+    return memo(spark, sf_dir, f"pq_codes/{m}/{k}/{iters}", build)
 
 
-@_locked
 def shared_neardup_components(
     spark: SparkSession, sf_dir: str, id_cap: int = 300, threshold: float = 0.3
 ) -> DataFrame:
@@ -295,14 +260,14 @@ def shared_neardup_components(
     """
     from ..operators.dedup import connected_components
 
-    key = _key(spark, sf_dir, f"neardup_cc/{id_cap}/{threshold}")
-    if key not in _CACHE:
-        pairs = shared_neardup_pairs(spark, sf_dir, id_cap, threshold)
-        _CACHE[key] = connected_components(pairs)
-    return _CACHE[key]
+    return memo(
+        spark, sf_dir, f"neardup_cc/{id_cap}/{threshold}",
+        lambda: connected_components(
+            shared_neardup_pairs(spark, sf_dir, id_cap, threshold)
+        ),
+    )
 
 
-@_locked
 def shared_neardup_pairs(
     spark: SparkSession, sf_dir: str, id_cap: int = 300, threshold: float = 0.3
 ) -> DataFrame:
@@ -316,8 +281,7 @@ def shared_neardup_pairs(
     from ..functions.similarity import dot
     from ..sources.testdata import load_table
 
-    key = _key(spark, sf_dir, f"neardup_pairs/{id_cap}/{threshold}")
-    if key not in _CACHE:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") < id_cap
         )
@@ -341,16 +305,18 @@ def shared_neardup_pairs(
             F.col("nrm").alias("nb"),
         )
         sim = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        _CACHE[key] = (
+        return (
             a.join(b, F.col("id_a") < F.col("id_b"))
             .filter(sim >= threshold)
             .select("id_a", "id_b")
             .localCheckpoint(eager=True)
         )
-    return _CACHE[key]
+
+    return memo(
+        spark, sf_dir, f"neardup_pairs/{id_cap}/{threshold}", build
+    )
 
 
-@_locked
 def shared_exact_knn_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact brute-force 5-NN majority vote over the embeddings
     probe/corpus split — shared by ``knn_classifier_vote`` (the result
@@ -362,8 +328,7 @@ def shared_exact_knn_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity_search import knn_bruteforce, majority_vote
     from ..sources.testdata import load_table
 
-    key = _key(spark, sf_dir, "exact_knn_vote/5/20")
-    if key not in _CACHE:
+    def build():
         emb = load_table(spark, sf_dir, "embeddings")
         # fixed probe PANEL (vec_id < 5000 is a no-op at sf <= 0.1):
         # classifier evaluation scores a bounded holdout — only the
@@ -374,11 +339,11 @@ def shared_exact_knn_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus = emb.filter(F.col("vec_id") % 20 != 0)
         nn = knn_bruteforce(corpus, probes, k=5)
         labels = emb.select(F.col("vec_id").alias("neighbor_id"), "label")
-        _CACHE[key] = majority_vote(nn, labels).localCheckpoint(eager=True)
-    return _CACHE[key]
+        return majority_vote(nn, labels).localCheckpoint(eager=True)
+
+    return memo(spark, sf_dir, "exact_knn_vote/5/20", build)
 
 
-@_locked
 def shared_hdp(
     spark: SparkSession,
     sf_dir: str,
@@ -392,10 +357,11 @@ def shared_hdp(
     from .topic_quality import hdp_emulation
 
     _, corpus = shared_corpus(spark, sf_dir)
-    key = _key(spark, sf_dir, f"hdp/{truncation_k}/{max_iter}")
-    if key not in _CACHE:
+
+    def build():
         model, masses = hdp_emulation(
             corpus, truncation_k=truncation_k, max_iter=max_iter
         )
-        _CACHE[key] = (model, masses.localCheckpoint(eager=True))
-    return _CACHE[key]
+        return model, masses.localCheckpoint(eager=True)
+
+    return memo(spark, sf_dir, f"hdp/{truncation_k}/{max_iter}", build)

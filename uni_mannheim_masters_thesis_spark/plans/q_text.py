@@ -1207,26 +1207,23 @@ def q_bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _trained_bpe(spark, sf_dir)[0]
 
 
-# trained tokenizer state shared between the training and encode
-# queries (both run the same deterministic loop; the two final dict
-# frames are localCheckpoint-pinned word dicts, KB-to-MB-scale)
-_BPE_TRAINED_CACHE: dict[tuple[int, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _trained_bpe(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    import os
-
+    """Trained tokenizer state shared by the training and encode queries
+    (both run the same deterministic loop; the two final dict frames are
+    localCheckpoint-pinned word dicts, KB-to-MB-scale), trained once per
+    session."""
     from ..ml.bpe import bpe_train_full, word_dictionary
+    from ..ml.shared import memo
 
-    key = (id(spark), os.path.abspath(sf_dir))
-    if key not in _BPE_TRAINED_CACHE:
-        docs = _t(spark, sf_dir, "documents")
-        _BPE_TRAINED_CACHE[key] = bpe_train_full(
-            spark, word_dictionary(docs), _BPE_N_MERGES
-        )
-    return _BPE_TRAINED_CACHE[key]
+    return memo(
+        spark, sf_dir, f"bpe_trained/{_BPE_N_MERGES}",
+        lambda: bpe_train_full(
+            spark, word_dictionary(_t(spark, sf_dir, "documents")),
+            _BPE_N_MERGES,
+        ),
+    )
 
 
 @_register(
