@@ -10,7 +10,7 @@ import threading
 import pyspark.sql.functions as F
 import pytest
 
-from uni_mannheim_masters_thesis_spark.cachedir import staged_cache_dir
+from uni_mannheim_masters_thesis_spark.scratch import staged_cache_dir
 
 
 # -- staged_cache_dir ---------------------------------------------------------

@@ -314,13 +314,12 @@ def stream_ivf_index(
     replay proof (batch 0 re-applied; the version must not move)."""
     import glob
     import shutil
-    import tempfile
     import time
-    import uuid
 
+    from ..scratch import query_dir
     from ..session import ensure_engine_confs
     from ..sources.lakehouse import create_table, latest_version
-    from ..streaming.runtime import _CKPT_ROOT
+    from ..streaming.runtime import run_to_end
     from .cluster import lloyd_centroids, quantize_vectors
 
     ensure_engine_confs(spark)
@@ -345,19 +344,18 @@ def stream_ivf_index(
     )
     t0 = time.time() - 2 * n_slices
     for i in range(n_slices):
-        staging = tempfile.mkdtemp(prefix="umt_annslice_")
-        (
-            odd.filter((F.col("vec_id") / 2).cast("long") % n_slices == i)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        parts = glob.glob(os.path.join(staging, "part-*.parquet"))
-        if parts:
-            dest = os.path.join(slices, f"batch_{i:02d}.parquet")
-            shutil.move(parts[0], dest)
-            os.utime(dest, (t0 + i, t0 + i))
-        shutil.rmtree(staging, ignore_errors=True)
+        with query_dir("umt_annslice_") as staging:
+            (
+                odd.filter((F.col("vec_id") / 2).cast("long") % n_slices == i)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(staging)
+            )
+            parts = glob.glob(os.path.join(staging, "part-*.parquet"))
+            if parts:
+                dest = os.path.join(slices, f"batch_{i:02d}.parquet")
+                shutil.move(parts[0], dest)
+                os.utime(dest, (t0 + i, t0 + i))
 
     static = spark.read.parquet(slices)
     stream = (
@@ -374,25 +372,7 @@ def stream_ivf_index(
         refresh_ivf_postings(spark, post_dir, delta, batch_id=batch_id)
         state["n_data_batches"] += 1
 
-    name = f"ann_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_", dir=_CKPT_ROOT)
-    try:
-        query = (
-            stream.writeStream.foreachBatch(_apply)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            query.processAllAvailable()
-        finally:
-            try:
-                query.stop()
-            finally:
-                sc = spark.sparkContext
-                sc.setLocalProperty("spark.sql.execution.id", None)
-                sc.setLocalProperty("spark.sql.execution.root.id", None)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    run_to_end(spark, stream.writeStream.foreachBatch(_apply), "ann_stream")
 
     # LIVE replay proof: re-apply batch 0's delta under its original
     # batch_id — the watermark must skip it without minting a version

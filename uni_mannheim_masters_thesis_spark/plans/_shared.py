@@ -235,26 +235,13 @@ def _rule_search_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build the persisted IVF index once per dataset (keyed by the
-    EMBEDDINGS mtime; staged-rename published like every /tmp cache)."""
-    import hashlib
-    import os
-    import tempfile
-
-    from ..cachedir import staged_cache_dir
+    """Build the persisted IVF index once per on-disk state of the
+    embeddings table (``scratch.published``)."""
     from ..ml.ann_index import build_ivf_index
+    from ..scratch import published
 
-    emb_path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        mtime = int(os.path.getmtime(emb_path))
-    except OSError:
-        mtime = 0
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}:ann".encode()
-    ).hexdigest()[:10]
-    tdir = os.path.join(tempfile.gettempdir(), f"umt_ann_index_{key}")
-    return staged_cache_dir(
-        tdir, "_UMT_ANN_DONE",
+    return published(
+        sf_dir, "embeddings", "umt_ann_index", "_UMT_ANN_DONE",
         lambda stage: build_ivf_index(
             spark, _t(spark, sf_dir, "embeddings"), stage
         ),

@@ -1228,23 +1228,16 @@ def q_event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     "COUNT(DISTINCT) is the exact oracle.",
 )
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import uuid as _uuid
-
     from ..sources.testdata import event_stream
+    from ..streaming.runtime import drain
 
     stream = (
         event_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicates(["user_id", "event_type"])
     )
-    name = f"dedup_{_uuid.uuid4().hex[:8]}"
-    q = stream.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        drain(stream, "append", name_prefix="dedup")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("n_users"))
     )

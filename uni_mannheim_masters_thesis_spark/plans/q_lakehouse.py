@@ -308,36 +308,16 @@ _LAKEHOUSE_SQL_PREFIX = """
 _LAKEHOUSE_POINT_KEYS = [1, 18, 35]
 
 
-def _dataset_cache_path(sf_dir: str, name: str, salt: str = "") -> str:
-    """/tmp path keyed by abs dataset path + events-table mtime (+
-    variant salt) — a new dataset or rewritten events file gets a fresh
-    cache dir, never a mutation of the shared one."""
-    import hashlib
-    import os
-    import tempfile
-
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    try:
-        mtime = int(os.path.getmtime(ev_path))
-    except OSError:
-        mtime = 0
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}{salt}".encode()
-    ).hexdigest()[:10]
-    return os.path.join(tempfile.gettempdir(), f"{name}_{key}")
-
-
 def _lakehouse_table_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per dataset — cache keyed by abs path + events
-    mtime; staged-rename published, so concurrent processes are safe)
-    the 3-version copy-on-write table the lakehouse queries read: v1
-    CREATE from era-0 latest state, v2/v3 MERGE of the era-1/era-2 CDC
+    """Build (once per on-disk state of the events table;
+    ``scratch.published``, so concurrent processes are safe) the
+    3-version copy-on-write table the lakehouse queries read: v1 CREATE
+    from era-0 latest state, v2/v3 MERGE of the era-1/era-2 CDC
     batches."""
-    from ..cachedir import staged_cache_dir
+    from ..scratch import published
 
-    tdir = _dataset_cache_path(sf_dir, "umt_lakehouse")
-    return staged_cache_dir(
-        tdir, "_UMT_BUILD_DONE",
+    return published(
+        sf_dir, "events", "umt_lakehouse", "_UMT_BUILD_DONE",
         lambda stage: _build_lakehouse_table(spark, sf_dir, stage),
     )
 
@@ -580,22 +560,19 @@ def _derived_lakehouse_dir(
     build,
     copy_shared: bool = True,
 ):
-    """Materialize a PRIVATE derived table once per dataset (cache key:
-    abs sf_dir + events mtime + suffix; staged-rename published, so
-    concurrent processes are safe). The shared cached table the other
-    lakehouse queries read is never mutated — lifecycle builders either
+    """Materialize a PRIVATE derived table once per on-disk state of
+    the events table (``scratch.published``, so concurrent processes
+    are safe). The shared cached table the other lakehouse queries
+    read is never mutated — lifecycle builders either
     work on a full copy of it or start from an empty dir
     (``copy_shared=False``); ``build(tdir)`` applies the
     suffix-specific commits."""
     import os
     import shutil
 
-    from ..cachedir import staged_cache_dir
+    from ..scratch import published
 
     base = _lakehouse_table_dir(spark, sf_dir) if copy_shared else None
-    tdir = _dataset_cache_path(
-        sf_dir, f"umt_lakehouse_{suffix}", salt=f":{suffix}"
-    )
 
     def _build(stage: str) -> None:
         if copy_shared:
@@ -603,7 +580,10 @@ def _derived_lakehouse_dir(
             os.remove(os.path.join(stage, "_UMT_BUILD_DONE"))
         build(stage)
 
-    return staged_cache_dir(tdir, f"_UMT_{suffix.upper()}_DONE", _build)
+    return published(
+        sf_dir, "events", f"umt_lakehouse_{suffix}",
+        f"_UMT_{suffix.upper()}_DONE", _build,
+    )
 
 
 def _lakehouse_ov_table_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -826,11 +806,10 @@ def _lakehouse_mv_table_dir(spark: SparkSession, sf_dir: str) -> str:
     exact-decimal value sum) built as CREATE from era 0 then TWO
     ``upsert_combine`` refreshes folding the era-1/era-2 partial
     aggregates into stored state — never a full recompute."""
-    from ..cachedir import staged_cache_dir
+    from ..scratch import published
 
-    tdir = _dataset_cache_path(sf_dir, "umt_lakehouse_mv", salt=":mv")
-    return staged_cache_dir(
-        tdir, "_UMT_MV_DONE",
+    return published(
+        sf_dir, "events", "umt_lakehouse_mv", "_UMT_MV_DONE",
         lambda stage: _build_mv_table(spark, sf_dir, stage),
     )
 
@@ -955,23 +934,18 @@ def q_streaming_lakehouse_sink(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
+    from ..scratch import query_dir
     from ..sources.lakehouse import read_table
     from ..streaming.lakehouse_sink import stream_cdc_into_table
 
-    # the table lives only for this query (deleted in the finally) —
-    # prefer tmpfs like the streaming checkpoints (_CKPT_ROOT): the 5
-    # sequential CoW MERGE commits then write their parquet versions +
-    # manifests to RAM instead of paying /tmp fsyncs per batch. On a
-    # real deployment the sink targets durable storage; this knob is
-    # test-lifetime only, the commit protocol is unchanged.
-    _shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    tdir = os.path.join(
-        tempfile.mkdtemp(prefix="umt_stream_sink_", dir=_shm), "tbl"
-    )
-    try:
+    # the table lives only for this query: a query_dir (tmpfs when the
+    # host has one) lets the 5 sequential CoW MERGE commits write their
+    # parquet versions + manifests to RAM instead of paying fsyncs per
+    # batch. On a real deployment the sink targets durable storage; the
+    # commit protocol is unchanged.
+    with query_dir("umt_stream_sink_") as scratch:
+        tdir = os.path.join(scratch, "tbl")
         ev = stream_cdc_into_table(spark, sf_dir, tdir)
         final = (
             read_table(spark, tdir)
@@ -980,11 +954,9 @@ def q_streaming_lakehouse_sink(
                 "last_event_type",
                 (F.round("last_value", 2) + F.lit(0.0)).alias("last_value"),
             )
-            # pin before the table dir is deleted below
+            # pin before the block removes the table dir
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(os.path.dirname(tdir), ignore_errors=True)
     return final.select(
         "*",
         F.lit(ev["n_data_batches"] >= 5).alias("ok_multi_batch"),
@@ -996,8 +968,8 @@ def q_streaming_lakehouse_sink(
 
 def _zorder_table_dir(spark: SparkSession, sf_dir: str) -> str:
     """Events Z-ORDER-clustered on (user_id, value) with file-level
-    zone maps (built once per dataset; staged-rename published)."""
-    from ..cachedir import staged_cache_dir
+    zone maps (built once per dataset; ``scratch.published``)."""
+    from ..scratch import published
     from ..sources.lakehouse import create_zordered_table
 
     def build(stage: str) -> None:
@@ -1006,8 +978,7 @@ def _zorder_table_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         create_zordered_table(ev, stage, ("user_id", "value"))
 
-    tdir = _dataset_cache_path(sf_dir, "umt_zorder", salt=":z")
-    return staged_cache_dir(tdir, "_UMT_Z_DONE", build)
+    return published(sf_dir, "events", "umt_zorder", "_UMT_Z_DONE", build)
 
 
 _Z_USER_RANGE = (10, 25)
@@ -1204,28 +1175,16 @@ def _incremental_dedup_metrics(spark: SparkSession, sf_dir: str) -> list:
     the store read to its batch's buckets, splits the batch into
     carryover vs new fingerprints, and MERGEs only the new ones in.
     Returns the per-era accounting (3 tuples — bounded driver data);
-    cached beside the store since merges mutate state. Keyed by the
-    DOCUMENTS mtime (the input it derives from), staged-rename
-    published like the other /tmp builders."""
-    import hashlib
+    cached beside the store since merges mutate state. Keyed on the
+    documents table it derives from (``scratch.published``)."""
     import json as _json
     import os
-    import tempfile
 
-    from ..cachedir import staged_cache_dir
+    from ..scratch import published
 
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        mtime = int(os.path.getmtime(doc_path))
-    except OSError:
-        mtime = 0
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}:idd".encode()
-    ).hexdigest()[:10]
-    tdir = os.path.join(tempfile.gettempdir(), f"umt_lakehouse_idd_{key}")
     stats_name = "_UMT_IDD_STATS.json"
-    staged_cache_dir(
-        tdir, stats_name,
+    tdir = published(
+        sf_dir, "documents", "umt_lakehouse_idd", stats_name,
         lambda stage: _build_incremental_dedup_store(spark, sf_dir, stage,
                                                      stats_name),
     )

@@ -1964,108 +1964,39 @@ def _bucketed_join_tables(
     """Persist orders + customer as BUCKETED tables (bucketBy on the
     join keys, same bucket count, one file per bucket via a
     bucket-aligned repartition) — the layout that lets repeated joins
-    on the key skip their exchanges entirely. Built once per session
-    per dataset (catalog-guarded); saveAsTable because bucket metadata
-    lives in the catalog, not the files.
+    on the key skip their exchanges entirely. saveAsTable because
+    bucket metadata lives in the catalog, not the files. Built once per
+    process per dataset (catalog-guarded).
 
-    The table name is PROCESS-unique (pid as a READABLE suffix): the
-    in-memory catalog dies with the process, so a second concurrent
-    process sees tableExists() == False for a name whose managed
-    location is alive and being read by the first — sharing the name
-    would make process B rmtree + rebuild the directory under process
-    A's cached file listing (observed: FAILED_READ_FILE.FILE_NOT_EXIST
-    in a pytest run concurrent with an oracle walk). Per-process
-    tables cost one ~1 s rebuild per process and make cross-process
-    interference structurally impossible; within a process the catalog
-    guard still caches across sessions.
-
-    Orphan reclamation: every build (a) registers an atexit rmtree for
-    its own two locations, and (b) sweeps sibling ``umt_bkt_*_<pid>``
-    directories whose embedded pid is no longer alive — so killed
-    processes' leaks are reclaimed by the next builder instead of
-    accumulating in spark-warehouse forever. Liveness is structural
-    (``os.kill(pid, 0)``), never mtime, so a long-running concurrent
-    walk's live tables are untouchable."""
-    import atexit
+    The tables are EXTERNAL, their files in a ``scratch.session_dir``:
+    the in-memory catalog and the files then both die with the process,
+    and nothing lands in the warehouse dir that concurrent processes
+    share, so no process can rebuild a location another one reads."""
     import hashlib
     import os
-    import re
-    import shutil
-    from urllib.parse import urlparse
 
-    key = (
-        hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:6]
-        + f"_{os.getpid()}"
-    )
-    t_orders, t_cust = f"umt_bkt_orders_{key}", f"umt_bkt_customer_{key}"
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    from ..scratch import session_dir
 
-    def _pid_alive(pid: int) -> bool:
-        # Portable liveness: signal 0 probes existence without touching
-        # the process. /proc/<pid> only exists on Linux — on macOS every
-        # sibling would look dead and the sweep would rmtree bucket
-        # tables belonging to LIVE concurrent processes.
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            return False
-        except PermissionError:
-            return True  # exists, owned by someone else
-        except OSError:
-            return True  # unknown — err on the side of keeping it
-        return True
-
-    def _sweep_dead_siblings() -> None:
-        pat = re.compile(r"^umt_bkt_\w+_[0-9a-f]{6}_(\d+)$")
-        try:
-            entries = os.listdir(wh)
-        except OSError:
-            return
-        for name in entries:
-            m = pat.match(name)
-            if m and not _pid_alive(int(m.group(1))):
-                shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
-
-    def _clear_stale_location(table: str) -> None:
-        # the in-memory catalog dies with the process but the managed
-        # location survives; an orphaned dir blocks re-creation
-        loc = os.path.join(wh, table.lower())
-        if os.path.isdir(loc):
-            shutil.rmtree(loc, ignore_errors=True)
-
-    if not (
-        spark.catalog.tableExists(t_orders)
-        and spark.catalog.tableExists(t_cust)
+    key = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:6]
+    tables = []
+    for src, cols, k in (
+        ("orders", ("o_orderkey", "o_custkey", "o_totalprice"), "o_custkey"),
+        ("customer", ("c_custkey", "c_mktsegment"), "c_custkey"),
     ):
-        _sweep_dead_siblings()
-        for t in (t_orders, t_cust):
-            atexit.register(
-                shutil.rmtree, os.path.join(wh, t.lower()), ignore_errors=True
+        name = f"umt_bkt_{src}_{key}"
+        if not spark.catalog.tableExists(name):
+            (
+                _t(spark, sf_dir, src)
+                .select(*cols)
+                .repartition(_BKT_N, k)  # task==bucket -> 1 file each
+                .write.bucketBy(_BKT_N, k)
+                .sortBy(k)
+                .option("path", session_dir(f"{name}_"))
+                .mode("overwrite")
+                .saveAsTable(name)
             )
-
-    if not spark.catalog.tableExists(t_orders):
-        _clear_stale_location(t_orders)
-        (
-            _t(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_custkey", "o_totalprice")
-            .repartition(_BKT_N, "o_custkey")  # task==bucket -> 1 file each
-            .write.bucketBy(_BKT_N, "o_custkey")
-            .sortBy("o_custkey")
-            .mode("overwrite")
-            .saveAsTable(t_orders)
-        )
-    if not spark.catalog.tableExists(t_cust):
-        _clear_stale_location(t_cust)
-        (
-            _t(spark, sf_dir, "customer")
-            .select("c_custkey", "c_mktsegment")
-            .repartition(_BKT_N, "c_custkey")
-            .write.bucketBy(_BKT_N, "c_custkey")
-            .sortBy("c_custkey")
-            .mode("overwrite")
-            .saveAsTable(t_cust)
-        )
-    return t_orders, t_cust
+        tables.append(name)
+    return tables[0], tables[1]
 
 
 @_register(

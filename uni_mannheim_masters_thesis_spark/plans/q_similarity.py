@@ -2923,14 +2923,13 @@ _ANN_DELETE_IDS = list(range(10))  # the purge panel: vec_id < 10
 def _ann_deleted_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """A PRIVATE copy of the persisted IVF index taken through a
     vector-level GDPR purge (delete vec_id < 10 from the posting
-    lists) — the shared cached index is never mutated; staged-rename
-    published like every /tmp cache."""
+    lists) — the shared cached index is never mutated; keyed on the
+    embeddings table (``scratch.published``)."""
     import os
     import shutil
 
-    from ..cachedir import staged_cache_dir
     from ..ml.ann_index import delete_vectors
-    from .q_lakehouse import _dataset_cache_path  # runtime: all loaded
+    from ..scratch import published
 
     src = _ann_index_dir(spark, sf_dir)
 
@@ -2941,8 +2940,9 @@ def _ann_deleted_index_dir(spark: SparkSession, sf_dir: str) -> str:
             spark, os.path.join(stage, "postings"), _ANN_DELETE_IDS
         )
 
-    tdir = _dataset_cache_path(sf_dir, "umt_ann_del", salt=":anndel")
-    return staged_cache_dir(tdir, "_UMT_ANNDEL_DONE", build)
+    return published(
+        sf_dir, "embeddings", "umt_ann_del", "_UMT_ANNDEL_DONE", build
+    )
 
 
 @_register(
@@ -3011,15 +3011,15 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ann_streamed_index_stats(spark: SparkSession, sf_dir: str):
-    """Build (once per dataset; staged-rename published) a fresh IVF
-    index maintained by the STREAMING refresh path, and return
-    (per-cell counts via the table read, run-evidence dict)."""
+    """Build (once per on-disk state of the embeddings table;
+    ``scratch.published``) a fresh IVF index maintained by the
+    STREAMING refresh path, and return (per-cell counts via the table
+    read, run-evidence dict)."""
     import json
     import os
 
-    from ..cachedir import staged_cache_dir
     from ..ml.ann_index import stream_ivf_index
-    from .q_lakehouse import _dataset_cache_path
+    from ..scratch import published
 
     def build(stage: str) -> None:
         ev = stream_ivf_index(
@@ -3028,10 +3028,10 @@ def _ann_streamed_index_stats(spark: SparkSession, sf_dir: str):
         with open(os.path.join(stage, "_UMT_ANNSTREAM_STATS.json"), "w") as f:
             json.dump(ev, f)
 
-    tdir = _dataset_cache_path(
-        sf_dir, "umt_ann_stream", salt=":annstream"
+    tdir = published(
+        sf_dir, "embeddings", "umt_ann_stream",
+        "_UMT_ANNSTREAM_STATS.json", build,
     )
-    staged_cache_dir(tdir, "_UMT_ANNSTREAM_STATS.json", build)
     with open(os.path.join(tdir, "_UMT_ANNSTREAM_STATS.json")) as f:
         return tdir, json.load(f)
 
@@ -3097,12 +3097,11 @@ def _ann_purged_index_dir(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    from ..cachedir import staged_cache_dir
     from ..ml.ann_index import delete_vectors
+    from ..scratch import published
     from ..sources.lakehouse import (
         optimize_table, read_table, vacuum_table,
     )
-    from .q_lakehouse import _dataset_cache_path
 
     src = _ann_index_dir(spark, sf_dir)
 
@@ -3122,8 +3121,10 @@ def _ann_purged_index_dir(spark: SparkSession, sf_dir: str) -> str:
         with open(os.path.join(stage, "_UMT_ANNPURGE_STATS.json"), "w") as f:
             json.dump({"n_purged_prepurge": n_purged}, f)
 
-    tdir = _dataset_cache_path(sf_dir, "umt_ann_purge", salt=":annpurge")
-    return staged_cache_dir(tdir, "_UMT_ANNPURGE_STATS.json", build)
+    return published(
+        sf_dir, "embeddings", "umt_ann_purge", "_UMT_ANNPURGE_STATS.json",
+        build,
+    )
 
 
 @_register(
@@ -3521,13 +3522,12 @@ def _incremental_index_dir(spark: SparkSession, sf_dir: str) -> str:
     re-tokenized or re-hashed on the serve path."""
     import os
 
-    from ..cachedir import staged_cache_dir
     from ..operators.dedup import (
         minhash_band_table,
         minhash_token_sets,
         token_set_fingerprint,
     )
-    from .q_lakehouse import _dataset_cache_path
+    from ..scratch import published
 
     def _build(stage: str) -> None:
         docs = _t(spark, sf_dir, "documents").filter(
@@ -3544,8 +3544,10 @@ def _incremental_index_dir(spark: SparkSession, sf_dir: str) -> str:
             "overwrite"
         ).parquet(os.path.join(stage, "bands"))
 
-    tdir = _dataset_cache_path(sf_dir, "umt_minhash_index", salt=":v3")
-    return staged_cache_dir(tdir, "_UMT_MINHASH_INDEX_DONE", _build)
+    return published(
+        sf_dir, "documents", "umt_minhash_index", "_UMT_MINHASH_INDEX_DONE",
+        _build,
+    )
 
 
 @_register(

@@ -315,10 +315,11 @@ def q_model_save_load(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+
+    from ..scratch import session_dir
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars")
-    target = os.path.join(tempfile.mkdtemp(prefix="xml_corpus_"), "dump")
+    target = os.path.join(session_dir("xml_corpus_"), "dump")
     (
         docs.write.format("xml")
         .option("rootTag", "corpus")
@@ -375,12 +376,12 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_make_wiki_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
+    from ..scratch import session_dir
     from ..sources.formats import read_dictionary_text, write_dictionary_text
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    dump = os.path.join(tempfile.mkdtemp(prefix="make_wiki_"), "dump")
+    dump = os.path.join(session_dir("make_wiki_"), "dump")
     (
         docs.write.format("xml")
         .option("rootTag", "corpus")
@@ -452,12 +453,13 @@ def q_make_wiki_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+
+    from ..scratch import session_dir
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", "source"
     )
-    target = os.path.join(tempfile.mkdtemp(prefix="part_corpus_"), "docs")
+    target = os.path.join(session_dir("part_corpus_"), "docs")
     docs.write.partitionBy("source").mode("overwrite").parquet(target)
     back = spark.read.parquet(target)
     return (
@@ -487,7 +489,8 @@ def q_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
+
+    from ..scratch import session_dir
 
     agg = (
         _t(spark, sf_dir, "documents")
@@ -497,7 +500,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_chars").cast("long").alias("total_chars"),
         )
     )
-    target = os.path.join(tempfile.mkdtemp(prefix="orc_corpus_"), "agg")
+    target = os.path.join(session_dir("orc_corpus_"), "agg")
     agg.write.mode("overwrite").orc(target)
     return spark.read.schema(
         "source string, n_docs long, total_chars long"

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .scratch import session_dir
+
 
 def default_parallelism() -> int:
     env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -124,10 +126,9 @@ def _ship_package_to_workers(spark: SparkSession) -> None:
         if key in _PYFILE_SHIPPED:
             return
         import shutil
-        import tempfile
 
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
-        staging = tempfile.mkdtemp(prefix="umt_pyfiles_")
+        staging = session_dir("umt_pyfiles_")
         zip_path = shutil.make_archive(
             os.path.join(staging, "uni_mannheim_masters_thesis_spark"),
             "zip",

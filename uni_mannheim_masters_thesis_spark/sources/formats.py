@@ -25,46 +25,40 @@ paths (not just an identity map):
 - **Model persistence** (S11): MLlib native ``save``/``load`` for
   CountVectorizer/LDA models (``webisalod_lda.py:48,57``).
 
-All roundtrips write under an ephemeral temp dir owned by the caller.
+Every roundtrip writes into a fresh ``scratch.session_dir``: the
+returned DataFrame reads those files lazily, so they live until the
+process exits.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _tmpdir(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=prefix)
+from ..scratch import session_dir
 
 
-def csv_roundtrip(df: DataFrame, schema: str, path: str | None = None) -> DataFrame:
+def csv_roundtrip(df: DataFrame, schema: str) -> DataFrame:
     """S6+S7: write df as headered CSV, read it back with the given
     explicit schema string."""
-    path = path or _tmpdir("metrics_csv_")
-    target = os.path.join(path, "out")
+    target = os.path.join(session_dir("metrics_csv_"), "out")
     df.write.mode("overwrite").option("header", True).csv(target)
     return df.sparkSession.read.option("header", True).schema(schema).csv(target)
 
 
-def json_roundtrip(df: DataFrame, schema: str, path: str | None = None) -> DataFrame:
+def json_roundtrip(df: DataFrame, schema: str) -> DataFrame:
     """S5: write df as JSON lines, read back with explicit schema."""
-    path = path or _tmpdir("artifact_json_")
-    target = os.path.join(path, "out")
+    target = os.path.join(session_dir("artifact_json_"), "out")
     df.write.mode("overwrite").json(target)
     return df.sparkSession.read.schema(schema).json(target)
 
 
-def write_dictionary_text(
-    vocab: DataFrame, num_docs: int, path: str | None = None
-) -> str:
+def write_dictionary_text(vocab: DataFrame, num_docs: int) -> str:
     """S9 writer: gensim dictionary text format. ``vocab`` must have
     columns (id, token, docfreq)."""
-    path = path or _tmpdir("dict_txt_")
-    target = os.path.join(path, "wordids")
+    target = os.path.join(session_dir("dict_txt_"), "wordids")
     spark = vocab.sparkSession
     header = spark.createDataFrame([(f"{num_docs}",)], "value string")
     body = vocab.select(
@@ -117,15 +111,13 @@ def write_matrix_market(
     triplets: DataFrame,
     n_rows: int,
     n_cols: int,
-    path: str | None = None,
     row_col: str = "row_id",
     col_col: str = "col_id",
     val_col: str = "value",
 ) -> str:
     """S10 writer: Matrix Market coordinate format (1-based indices,
     like gensim's MmWriter)."""
-    path = path or _tmpdir("mm_corpus_")
-    target = os.path.join(path, "corpus.mm")
+    target = os.path.join(session_dir("mm_corpus_"), "corpus.mm")
     spark = triplets.sparkSession
     triplets = triplets.cache()  # read twice: nnz header + body write
     nnz = triplets.count()
@@ -166,9 +158,8 @@ def read_matrix_market(spark: SparkSession, target: str) -> DataFrame:
     )
 
 
-def model_save_load_roundtrip(model, loader_cls, path: str | None = None):
+def model_save_load_roundtrip(model, loader_cls):
     """S11: persist an MLlib model and load it back."""
-    path = path or _tmpdir("mllib_model_")
-    target = os.path.join(path, "model")
+    target = os.path.join(session_dir("mllib_model_"), "model")
     model.write().overwrite().save(target)
     return loader_cls.load(target)

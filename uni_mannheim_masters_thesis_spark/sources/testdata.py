@@ -53,14 +53,11 @@ _NS_TIMESTAMP_COLS: dict[str, tuple[str, ...]] = {
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
 
-def _stamp(spark: SparkSession, path: str) -> tuple:
-    """What an inferred parquet schema depends on: the bytes on disk and
-    whether TIMESTAMP(NANOS) surfaces as ``bigint``.
-
-    A single file is stamped by its mtime and size; a parquet directory
-    by the sorted (relative path, mtime, size) of the data files Spark
-    lists (names starting with ``_`` or ``.`` are metadata it skips).
-    """
+def disk_stamp(path: str) -> tuple:
+    """The on-disk state of a table: a single file is stamped by its
+    mtime and size; a parquet directory by the sorted (relative path,
+    mtime, size) of the data files Spark lists (names starting with
+    ``_`` or ``.`` are metadata it skips)."""
     if os.path.isdir(path):
         files = []
         for root, dirs, names in os.walk(path):
@@ -70,12 +67,16 @@ def _stamp(spark: SparkSession, path: str) -> tuple:
                     f = os.path.join(root, n)
                     fst = os.stat(f)
                     files.append((os.path.relpath(f, path), fst.st_mtime_ns, fst.st_size))
-        disk = tuple(sorted(files))
-    else:
-        st = os.stat(path)
-        disk = (st.st_mtime_ns, st.st_size)
+        return tuple(sorted(files))
+    st = os.stat(path)
+    return st.st_mtime_ns, st.st_size
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple:
+    """What an inferred parquet schema depends on: the bytes on disk and
+    whether TIMESTAMP(NANOS) surfaces as ``bigint``."""
     nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    return disk, nanos
+    return disk_stamp(path), nanos
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:

@@ -42,16 +42,13 @@ the key) plus a copy-on-write rewrite of only the touched buckets.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import ensure_engine_confs
 from ..sources.testdata import normalize_ts
-from .runtime import _CKPT_ROOT, stream_state_partitions
+from .runtime import run_to_end, stream_state_partitions
 from .throughput import split_events_dir
 
 
@@ -141,33 +138,16 @@ def stream_cdc_into_table(
         if apply_cdc_batch(spark, table_dir, batch, batch_id):
             state["n_data_batches"] += 1
 
-    name = f"lakehouse_sink_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_", dir=_CKPT_ROOT)
-    try:
-        # per-micro-batch plans (CDC window + MERGE join) inherit the
-        # session shuffle width — 32 partitions of scheduling overhead
-        # for KB-scale batches. Cap them like every other drain (the
-        # runtime's state-partition discipline); the CDC reduction and
-        # the MERGE are partitioning-independent (deterministic
-        # row_number total order / equi-join), so the committed table
-        # bytes are unchanged. Production sizes this to stream volume.
-        with stream_state_partitions(spark):
-            query = (
-                stream.writeStream.foreachBatch(_apply)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                query.processAllAvailable()
-            finally:
-                try:
-                    query.stop()
-                finally:
-                    sc = spark.sparkContext
-                    sc.setLocalProperty("spark.sql.execution.id", None)
-                    sc.setLocalProperty("spark.sql.execution.root.id", None)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # per-micro-batch plans (CDC window + MERGE join) inherit the
+    # session shuffle width — 32 partitions of scheduling overhead for
+    # KB-scale batches. Cap them for the whole run, not just the start
+    # (the runtime's state-partition discipline); the CDC reduction and
+    # the MERGE are partitioning-independent (deterministic row_number
+    # total order / equi-join), so the committed table bytes are
+    # unchanged. Production sizes this to stream volume.
+    with stream_state_partitions(spark):
+        run_to_end(spark, stream.writeStream.foreachBatch(_apply),
+                   "lakehouse_sink")
     return {
         "n_data_batches": state["n_data_batches"],
         "n_versions": latest_version(table_dir),

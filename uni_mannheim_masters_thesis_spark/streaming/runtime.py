@@ -27,14 +27,14 @@ raise :data:`STREAM_STATE_PARTITION_CAP` there; nothing else changes.
 from __future__ import annotations
 
 import json
-import os
-import shutil
-import tempfile
 import threading
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
+
+from ..scratch import query_dir
 
 STREAM_STATE_PARTITION_CAP = 4
 
@@ -44,19 +44,9 @@ STREAM_STATE_PARTITION_CAP = 4
 #: the "previous" setting). Reentrant so a capped caller that drains a
 #: nested stream never deadlocks. Serial callers (the bench, the driver
 #: walk) pay one uncontended acquire.
-
-# Checkpoint root for the synchronous drains: prefer tmpfs (/dev/shm)
-# when present — the HDFS-backed state store then writes its delta/
-# commit files to RAM instead of paying per-micro-batch fsyncs on /tmp
-# (measured ~1 s over the 8-query family at sf0.1). Each drain gets its
-# own subdirectory and removes it deterministically on stop, so nothing
-# accumulates. On a real cluster you would point this at durable
-# storage instead — the knob is deployment-level, not semantic.
-_CKPT_ROOT = "/dev/shm" if os.path.isdir("/dev/shm") else None
+_CAP_LOCK = threading.RLock()
 
 _KEY = "spark.sql.shuffle.partitions"
-
-_CAP_LOCK = threading.RLock()
 
 
 @contextmanager
@@ -74,40 +64,32 @@ def stream_state_partitions(spark: SparkSession, cap: int = STREAM_STATE_PARTITI
             spark.conf.set(_KEY, cur)
 
 
-def drain(
-    agg: DataFrame,
-    output_mode: str,
-    name_prefix: str = "stream",
-    cap: int = STREAM_STATE_PARTITION_CAP,
+def run_to_end(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    name_prefix: str,
+    cap: int | None = None,
     progress_out: list | None = None,
-) -> DataFrame:
-    """Run a streaming DataFrame to completion on a memory sink and
-    return the drained table (batch DataFrame).
+) -> str:
+    """Start ``writer`` as a query named ``<name_prefix>_<random>``,
+    process all available input, stop it, and return the name.
 
-    When ``progress_out`` is a list, every StreamingQueryProgress dict
-    the run produced (batchId, numInputRows, durationMs, stateOperators
-    ...) is appended to it before the query stops — the raw material
-    for per-micro-batch latency/state evidence."""
-    spark = agg.sparkSession
+    The checkpoint is a ``scratch.query_dir`` (tmpfs when the host has
+    one: the state store then writes its delta/commit files to RAM
+    instead of paying per-micro-batch fsyncs), removed on every exit
+    path. ``cap`` caps state partitions for the start, the moment the
+    state-store instance count is fixed; keeping the capped-conf window
+    to ``.start()`` lets independent drains overlap from driver threads
+    instead of serializing on the conf lock. When ``progress_out`` is a
+    list, every StreamingQueryProgress dict the run produced (batchId,
+    numInputRows, durationMs, stateOperators ...) is appended to it
+    before the query stops."""
     name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_", dir=_CKPT_ROOT)
-    # _CKPT_ROOT may be RAM-backed (/dev/shm): the directory must be
-    # removed on EVERY exit path — including start() raising, or stop()
-    # itself throwing — or leaked checkpoints consume memory.
-    try:
-        # the cap only matters AT QUERY START (state-store instance
-        # count is fixed then), so the capped-conf window covers just
-        # .start() — r14: this lets independent drains overlap from
-        # driver threads (guide §2.6) instead of serializing the whole
-        # processAllAvailable on the conf lock
-        with stream_state_partitions(spark, cap):
-            query = (
-                agg.writeStream.outputMode(output_mode)
-                .format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
+    with query_dir(f"{name}_") as ckpt:
+        writer = writer.queryName(name).option("checkpointLocation", ckpt)
+        capped = cap is not None
+        with stream_state_partitions(spark, cap) if capped else nullcontext():
+            query = writer.start()
         try:
             query.processAllAvailable()
             if progress_out is not None:
@@ -128,6 +110,18 @@ def drain(
                 sc = spark.sparkContext
                 sc.setLocalProperty("spark.sql.execution.id", None)
                 sc.setLocalProperty("spark.sql.execution.root.id", None)
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    return name
+
+
+def drain(
+    agg: DataFrame,
+    output_mode: str,
+    name_prefix: str = "stream",
+    cap: int = STREAM_STATE_PARTITION_CAP,
+    progress_out: list | None = None,
+) -> DataFrame:
+    """Run a streaming DataFrame to completion on a memory sink and
+    return the drained table (batch DataFrame); see :func:`run_to_end`."""
+    spark = agg.sparkSession
+    writer = agg.writeStream.outputMode(output_mode).format("memory")
+    return spark.table(run_to_end(spark, writer, name_prefix, cap, progress_out))

@@ -39,11 +39,11 @@ from __future__ import annotations
 
 import os
 import statistics
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import published, query_dir
 from ..session import ensure_engine_confs
 from ..sources.testdata import load_table, normalize_ts
 from .runtime import drain
@@ -70,7 +70,8 @@ _PROVIDERS = {
 
 def split_events_dir(spark: SparkSession, sf_dir: str, n: int = N_SPLITS) -> str:
     """Write the events table as ``n`` time-range parquet files (once
-    per process per sf_dir) — FileStreamSource + maxFilesPerTrigger=1
+    per on-disk state of the events table; ``scratch.published``) —
+    FileStreamSource + maxFilesPerTrigger=1
     then replays them as ``n`` time-ordered micro-batches, the arrival
     pattern a file-drop ingestion produces.
 
@@ -81,28 +82,8 @@ def split_events_dir(spark: SparkSession, sf_dir: str, n: int = N_SPLITS) -> str
     makes whole slices 'late', and the watermark silently drops their
     rows (observed: 17/23 join pairs survived a scrambled replay).
     """
-    # cache key: abs path + events-table mtime, not just the basename —
-    # two datasets sharing a directory basename (sf0.1 under different
-    # roots, a rebuilt .sf1) must NOT reuse each other's stale slices
-    import hashlib
-
-    ev_path = os.path.join(sf_dir, "events.parquet")
-    try:
-        mtime = int(os.path.getmtime(ev_path))
-    except OSError:
-        mtime = 0
-    key = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}:{mtime}".encode()
-    ).hexdigest()[:10]
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"umt_stream_split_{os.path.basename(os.path.normpath(sf_dir))}"
-        f"_{n}_{key}",
-    )
-    from ..cachedir import staged_cache_dir
-
-    return staged_cache_dir(
-        base, "_UMT_SPLIT_DONE",
+    return published(
+        sf_dir, "events", f"umt_stream_split_{n}", "_UMT_SPLIT_DONE",
         lambda stage: _build_event_splits(spark, sf_dir, stage, n),
     )
 
@@ -132,23 +113,19 @@ def _build_event_splits(
     )
     t0 = time.time() - 2 * n
     for i in range(1, n + 1):
-        staging = tempfile.mkdtemp(prefix="umt_slice_")
-        (
-            sliced.filter(F.col("_b") == i)
-            .drop("_b")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(staging)
-        )
-        parts = glob.glob(os.path.join(staging, "part-*.parquet"))
-        if not parts:  # a sample-balanced range slice can be empty
-            shutil.rmtree(staging, ignore_errors=True)
-            continue
-        part = parts[0]
-        dest = os.path.join(base, f"batch_{i:02d}.parquet")
-        shutil.move(part, dest)
-        os.utime(dest, (t0 + i, t0 + i))
-        shutil.rmtree(staging, ignore_errors=True)
+        with query_dir("umt_slice_") as staging:
+            (
+                sliced.filter(F.col("_b") == i)
+                .drop("_b")
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(staging)
+            )
+            parts = glob.glob(os.path.join(staging, "part-*.parquet"))
+            if parts:  # a sample-balanced range slice can be empty
+                dest = os.path.join(base, f"batch_{i:02d}.parquet")
+                shutil.move(parts[0], dest)
+                os.utime(dest, (t0 + i, t0 + i))
     sliced.unpersist()
 
 
