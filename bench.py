@@ -15,10 +15,12 @@ per-query map is always written to bench_full.json next to this file.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import sys
 import time
+from typing import Callable
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
@@ -27,6 +29,7 @@ from uni_mannheim_masters_thesis_spark.plans.registry import (
     _DRIVER_SUITES,
     REGISTRY,
 )
+from uni_mannheim_masters_thesis_spark.scratch import BUILD_WALLS
 from uni_mannheim_masters_thesis_spark.session import get_session
 
 # keep the whole stdout line comfortably inside the driver's capture
@@ -44,7 +47,15 @@ _MAX_LINE = 1600
 # v4: the retime baseline is min(pinned, last recorded time), both
 # taken only from files at the run's scale factor (1.0 when neither
 # has the query), replacing the hand-typed per-query cost hints.
-_PROTOCOL = "v4-single-run+spike-median3-scaled-slack+measured-baseline"
+# v5: a first run that ran a one-time shared build (a new or changed
+# BUILD_WALLS entry: an ml.shared.memo artifact or a scratch.published
+# cache) is discarded and the query timed again, at most once per
+# query. Per-query numbers are warm costs whatever the order, and the
+# builds leave the total (they are listed in shared_build_s).
+_PROTOCOL = (
+    "v5-cold-discard+single-run+spike-median3-scaled-slack"
+    "+measured-baseline"
+)
 
 
 def _load_times(path: str) -> tuple[object, dict[str, float]]:
@@ -102,6 +113,62 @@ def _read_cpu_stat() -> tuple[int, int]:
         return 0, 0
 
 
+def timed(
+    run: Callable[[], float], hint: float, name: str,
+    retimed_s: dict[str, dict],
+) -> float:
+    """One measurement of ``run`` (returns its wall) under the pinned
+    protocol.
+
+    Cold-run discard (v5): a first run that added or changed a
+    ``BUILD_WALLS`` entry ran a one-time shared build, so it is
+    discarded and ``run`` is timed again. The discard happens at most
+    once, so a query that builds on every call is still measured.
+
+    Spike guard (v2, round 5): single-JVM runs show multi-second GC/JIT
+    hiccups that land on random queries (observed: the same query
+    swinging 2.4s ↔ 8.0s across runs). A measurement above the spike
+    threshold triggers exactly TWO repeat executions and the query
+    reports the MEDIAN of the three runs. Median keeps the guard robust
+    to single-run GC storms (observed: a 93s first measurement on a 10s
+    query) but — unlike the old best-of-N — cannot ratchet a genuinely
+    regressed query's number down: if all three runs are slow, the
+    reported time is slow. ``hint`` (the baseline min(pinned, prev)) is
+    used for DETECTION only, never for reporting.
+
+    A discarded or retimed query gets a ``retimed_s[name]`` entry: its
+    first run, the samples behind its number and, after a discard, the
+    ``built`` tags.
+    """
+    before = dict(BUILD_WALLS)
+    first = run()
+    built = sorted(k for k, v in BUILD_WALLS.items() if before.get(k) != v)
+    t = run() if built else first
+    # absolute slack scales with the hint, clamped to [0.3s, 1.2s]:
+    # big queries keep the old +1.2s band; sub-second queries get a
+    # tight band so warm-up spikes are re-measured (median of 3)
+    # rather than reported raw — a ~0.3s query retime costs <1s
+    slack = min(1.2, max(0.3, hint))
+    samples = [t]
+    if t > max(1.6 * hint, hint + slack):
+        samples = sorted([t, run(), run()])
+        t = samples[1]
+    if built or len(samples) > 1:
+        print(
+            f"bench retimed {name}: {first:.2f}s -> {t:.2f}s of "
+            f"{[round(s, 2) for s in samples]}"
+            + (f", built {built}" if built else ""),
+            file=sys.stderr,
+        )
+        retimed_s[name] = {
+            "first_run_s": round(first, 3),
+            "samples_s": [round(s, 3) for s in samples],
+        }
+        if built:
+            retimed_s[name]["built"] = built
+    return t
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -144,44 +211,6 @@ def main() -> None:
         drain(warm_stream, "complete", name_prefix="bench_warmup")
     except Exception as e:  # noqa: BLE001
         print(f"bench warmup skipped: {type(e).__name__}: {e}", file=sys.stderr)
-
-    # Shared-cache priming: several query families read versioned /tmp
-    # artifacts (the derived binary corpus, the CoW lakehouse tables,
-    # the persisted ANN index) that are built ONCE per (dataset, mtime)
-    # and then only read. On a fresh host the one-time build otherwise
-    # lands on whichever query touches the cache first — r9 evidence: a
-    # cold-cache run charged binary_neardup_pairs 25.3s vs its 1.9s
-    # steady-state read path. Priming the caches here keeps every
-    # timed number a steady-state plan cost (the same convention the
-    # SCALING rows use: cached read paths are measured warm, the
-    # one-time builds are reported separately). Each prime is <1.5s
-    # when the cache already exists.
-    # r13 verdict item 5: prime costs were reported nowhere — record
-    # each prime's wall next to the shared_build_s walls (additions-only
-    # observability; the timed per-query numbers are unchanged)
-    prime_s: dict[str, float] = {}
-    for _prime in (
-        "binary_chunk_savings",     # derived binary corpus + chunk digests
-        "lakehouse_history",        # CoW base table + versions
-        "lakehouse_restore",        # derived/restored table dirs
-        "zorder_zone_map_pruning",  # z-ordered table + zone maps
-        "ann_index_build",          # persisted IVF index tables
-        "ann_index_delete",         # deleted-variant index cache
-        "streaming_ann_index_refresh",  # streamed-maintenance index cache
-        "incremental_fuzzy_dedup",  # persisted corpus MinHash index
-    ):
-        try:
-            _t0 = time.time()
-            REGISTRY[_prime].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            prime_s[_prime] = round(time.time() - _t0, 3)
-        except Exception as e:  # noqa: BLE001
-            print(
-                f"bench cache prime {_prime} skipped: "
-                f"{type(e).__name__}: {e}",
-                file=sys.stderr,
-            )
 
     # heaviest-first execution: multi-second ML queries absorb the
     # remaining first-touch codegen/JIT cost (noise relative to their
@@ -226,11 +255,9 @@ def main() -> None:
 
     order = sorted(names, key=lambda n: -_hint(n))
     timings: dict[str, float] = {}
-    # r13 verdict item 5: when the spike guard retimes a query, the
-    # reported median silently hides the discarded first run (which may
-    # carry real one-time cold cost, e.g. a session-shared build).
-    # Record every retimed query's first run + all samples so cold cost
-    # is visible per query (additions-only to bench_full.json).
+    # every query whose first run was discarded (a shared build) or
+    # spike-retimed: its first run, the samples behind its number and
+    # the builds it paid, so cold cost stays visible per query
     retimed_s: dict[str, dict] = {}
 
     def run_once(name: str) -> float:
@@ -249,47 +276,10 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return time.time() - t0
 
-    def timed(name: str) -> float:
-        """One spike-guarded measurement under the pinned protocol.
-
-        Single-JVM 32-thread runs show multi-second GC/JIT hiccups that
-        land on random queries (observed: the same query swinging
-        2.4s ↔ 8.0s across runs). Pinned protocol (v2, round 5): a
-        first measurement above the spike threshold triggers exactly
-        TWO repeat executions and the query reports the MEDIAN of the
-        three runs. Median keeps the guard robust to single-run GC
-        storms (observed: a 93s first measurement on a 10s query) but —
-        unlike the old best-of-N — cannot ratchet a genuinely regressed
-        query's number down: if all three runs are slow, the reported
-        time is slow. The baseline min(pinned, prev) is used for
-        DETECTION only, never for reporting.
-        """
-        t1 = run_once(name)
-        hint = _hint(name)
-        # absolute slack scales with the hint, clamped to [0.3s, 1.2s]:
-        # big queries keep the old +1.2s band; sub-second queries get a
-        # tight band so warm-up spikes are re-measured (median of 3)
-        # rather than reported raw — a ~0.3s query retime costs <1s
-        slack = min(1.2, max(0.3, hint))
-        threshold = max(1.6 * hint, hint + slack)
-        if t1 > threshold:
-            samples = sorted([t1, run_once(name), run_once(name)])
-            t_med = samples[1]
-            print(
-                f"bench retimed {name}: {t1:.2f}s -> median "
-                f"{t_med:.2f}s of {[round(s, 2) for s in samples]}",
-                file=sys.stderr,
-            )
-            retimed_s[name] = {
-                "first_run_s": round(t1, 3),
-                "samples_s": [round(s, 3) for s in samples],
-            }
-            t1 = t_med
-        return t1
-
     for name in order:
+        run, hint = functools.partial(run_once, name), _hint(name)
         try:
-            timings[name] = round(timed(name), 3)
+            timings[name] = round(timed(run, hint, name, retimed_s), 3)
         except Exception as e:  # noqa: BLE001
             # one retry: the only failure observed in 5 rounds was the
             # transient thread-local race documented in run_once; a
@@ -301,7 +291,7 @@ def main() -> None:
                 file=sys.stderr,
             )
             try:
-                timings[name] = round(timed(name), 3)
+                timings[name] = round(timed(run, hint, name, retimed_s), 3)
             except Exception as e2:  # noqa: BLE001
                 print(
                     f"bench error in {name} (retry): {type(e2).__name__}: {e2}",
@@ -334,19 +324,9 @@ def main() -> None:
             100.0 * (steal1 - _cpu0[0]) / (total1 - _cpu0[1]), 2
         )
 
-    # Shared-build honesty (r12 verdict item 5): queries riding
-    # session-shared memoized builds (LDA, scaled split, kernel-sweep
-    # frames, PQ codebooks, ...) report near-zero warm walls; the
-    # one-time build cost lands on whichever query touches the cache
-    # first. Exporting the per-build walls next to the query timings
-    # keeps the two readable separately — a pin measures plan cost,
-    # not cache luck.
-    try:
-        from uni_mannheim_masters_thesis_spark.ml import shared as _ml_shared
-
-        shared_build_s = dict(sorted(_ml_shared.BUILD_WALLS.items()))
-    except Exception:  # noqa: BLE001
-        shared_build_s = {}
+    # the one-time shared builds (memo artifacts and published caches)
+    # the discarded first runs paid, readable beside the warm timings
+    shared_build_s = dict(sorted(BUILD_WALLS.items()))
 
     full = {
         "metric": "total_registry_query_seconds",
@@ -360,7 +340,6 @@ def main() -> None:
         "pinned_sf": pinned_sf,
         "host_steal_pct": steal_pct,
         "shared_build_s": shared_build_s,
-        "prime_s": prime_s,
         "retimed_s": retimed_s,
     }
     with open(os.path.join(_REPO, "bench_full.json"), "w") as f:

@@ -1,7 +1,8 @@
 """``scratch`` owns every directory the package writes outside its
 inputs: no other module makes a temp dir, a process leaves nothing but
 published caches behind, dead processes' roots are swept, and published
-caches are keyed on the table they are built from."""
+caches are keyed on the table they are built from, record their builds
+and reclaim the copies a rebuild makes stale."""
 
 from __future__ import annotations
 
@@ -116,7 +117,7 @@ def test_process_leaves_only_published_dirs(tmp_path):
     for name in os.listdir(tmp):
         path = os.path.join(tmp, name)
         assert os.path.isdir(path) and not name.startswith("umt_scratch_"), name
-        assert any(m.startswith("_UMT_") for m in os.listdir(path)), name
+        assert scratch._SOURCE in os.listdir(path), name
     wh = cwd / "spark-warehouse"
     assert not wh.exists() or not os.listdir(wh), os.listdir(wh)
     for root in out["roots"]:
@@ -206,3 +207,79 @@ def test_published_cache_keys_on_the_table_it_is_built_from(
     # a rewrite within the same second still counts
     os.utime(emb, ns=(st.st_atime_ns, st.st_mtime_ns + 1000))
     assert _ann_deleted_index_dir(spark, str(sf)) != before
+
+
+def _private_tmpdir(tmp_path, monkeypatch):
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(scratch, "_ROOTS", {})
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    return tmp
+
+
+def _touch_rewrite(path):
+    st = os.stat(path)
+    path.write_bytes(path.read_bytes())
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1000))
+
+
+def test_published_miss_records_its_build_and_a_hit_does_not(
+    tmp_path, monkeypatch
+):
+    _private_tmpdir(tmp_path, monkeypatch)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "events.parquet").write_bytes(b"x")
+    name = f"umt_probe_{os.getpid()}"
+    builds = []
+    try:
+        first = scratch.published(str(sf), "events", name, "_DONE",
+                                  builds.append)
+        assert scratch.BUILD_WALLS[name] >= 0
+        del scratch.BUILD_WALLS[name]
+        again = scratch.published(str(sf), "events", name, "_DONE",
+                                  builds.append)
+        assert again == first and len(builds) == 1
+        assert name not in scratch.BUILD_WALLS
+        with open(os.path.join(first, scratch._SOURCE)) as f:
+            assert f.read() == repr((str(sf), "events"))
+    finally:
+        scratch.BUILD_WALLS.pop(name, None)
+
+
+def test_published_rebuild_reclaims_the_stale_copy(
+    spark, tmp_path, monkeypatch
+):
+    from uni_mannheim_masters_thesis_spark.plans.q_similarity import (
+        _ann_deleted_index_dir,
+    )
+
+    tmp = _private_tmpdir(tmp_path, monkeypatch)
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    gone = tmp_path / "gone"
+    events_cache = scratch.published(
+        str(sf), "events", "umt_probe_events", "_DONE", lambda stage: None
+    )
+    # an old-format dir (no source stamp) and one whose dataset is gone
+    legacy = tmp / "umt_ann_del_0123456789"
+    orphan = tmp / "umt_ann_del_abcdef0123"
+    for d in (legacy, orphan):
+        d.mkdir()
+        (d / "_UMT_ANNDEL_DONE").write_text("ok")
+    (orphan / scratch._SOURCE).write_text(repr((str(gone), "embeddings")))
+
+    before = _ann_deleted_index_dir(spark, str(sf))
+    assert not orphan.exists() and legacy.exists()
+    _touch_rewrite(sf / "embeddings.parquet")
+    after = _ann_deleted_index_dir(spark, str(sf))
+
+    assert after != before and not os.path.exists(before)
+    left = sorted(n for n in os.listdir(tmp) if n.startswith("umt_ann_del_"))
+    assert left == sorted([legacy.name, os.path.basename(after)])
+    built = set(scratch.BUILD_WALLS)
+    assert scratch.published(
+        str(sf), "events", "umt_probe_events", "_DONE", lambda stage: None
+    ) == events_cache
+    assert set(scratch.BUILD_WALLS) == built
+    scratch.BUILD_WALLS.pop("umt_probe_events", None)

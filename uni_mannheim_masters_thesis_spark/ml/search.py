@@ -302,8 +302,8 @@ def rule_point_search(
 
     - the expensive part (LDA inference) is done ONCE by the caller;
       ``scored`` holds each doc's topic-probability array, its token
-      count, and a param-independent gold flag, and stays cached
-      across trials;
+      count, and a param-independent gold flag, materialized once by
+      the caller for every trial;
     - each trial ADMITS docs with ``doc_len >= min_doc_len`` (the
       reference's MIN_DOC_LEN gate excludes short concepts from the
       corpus before the rule runs), applies the rule
@@ -331,28 +331,7 @@ def rule_point_search(
     t_choices = list(range(t_lo, t_hi + 1))
     rng = np.random.RandomState(seed)
 
-    base = scored.select(
-        F.col(probs_col).alias("__probs"),
-        F.col(gold_col).cast("boolean").alias("__gold"),
-        F.col(len_col).cast("long").alias("__len"),
-    ).cache()
-
-    def trial_f1(min_prob: float, min_topics: int, min_len: int) -> float:
-        pred = (
-            F.size(F.filter("__probs", lambda p: p >= F.lit(float(min_prob))))
-            > F.lit(int(min_topics))
-        )
-        row = (
-            base.filter(F.col("__len") >= F.lit(int(min_len)))
-            .select(
-                F.sum((pred & F.col("__gold")).cast("long")).alias("tp"),
-                F.sum((pred & ~F.col("__gold")).cast("long")).alias("fp"),
-                F.sum((~pred & F.col("__gold")).cast("long")).alias("fn"),
-            )
-            .first()
-        )
-        tp, fp, fn = row["tp"] or 0, row["fp"] or 0, row["fn"] or 0
-        return 2.0 * tp / (2 * tp + fp + fn) if (2 * tp + fp + fn) else 0.0
+    base = _rule_base(scored, probs_col, gold_col, len_col)
 
     def kde_logpdf(x: float, pts: np.ndarray, span: float) -> float:
         bw = max(1.06 * (np.std(pts) or 0.0) * len(pts) ** -0.2, 0.05 * span)
@@ -379,42 +358,34 @@ def rule_point_search(
         for l in (l_lo, l_hi)
     ] + [(0.5 * (p_lo + p_hi), t_choices[len(t_choices) // 2], l_mid)]
     n_corners = 8
-    trials: list[tuple[float, int, int, float]] = []
-    try:
-        # the warmup points are FIXED (corners + center — they condition
-        # on nothing), so score them all in ONE distributed pass via the
-        # same q-EI batch scorer the forest arm uses (r12 verdict item
-        # 7). Bit-identical to the serial loop: both paths aggregate the
-        # same integer tp/fp/fn and apply the same f1 formula
-        # (tests/test_round13_ops.py pins batched == serial per point).
-        wb = [(float(mp), int(mt), int(ml)) for mp, mt, ml in warmup]
-        for (mp, mt, ml), f1 in zip(wb, _rule_f1_batch(base, wb)):
-            trials.append((mp, mt, ml, f1))
-        # the TPE proposals stay sequential BY CONSTRUCTION — each
-        # conditions on every previous trial's score, so batching them
-        # would change the proposal stream (the forest arm is the
-        # batched-acquisition variant; this arm is the faithful
-        # sequential one)
-        for t in range(len(warmup), n_trials):
-            obs = sorted(trials, key=lambda r: -r[3])
-            n_good = max(1, int(round(gamma * len(obs))))
-            mp = kde_pick(
-                [r[0] for r in obs[:n_good]],
-                [r[0] for r in obs[n_good:]], p_lo, p_hi,
-            )
-            ml = kde_pick(
-                [r[2] for r in obs[:n_good]],
-                [r[2] for r in obs[n_good:]], l_lo, l_hi, as_int=True,
-            )
-            good_ts = [r[1] for r in obs[:n_good]]
-            mt = int(max(t_choices, key=lambda c: good_ts.count(c)))
-            trials.append(
-                (float(mp), int(mt), int(ml), trial_f1(mp, mt, ml))
-            )
-    finally:
-        # the cache only serves the trial loop; the returned report is a
-        # local relation — don't leave the arrays pinned in storage
-        base.unpersist()
+    # the warmup points are FIXED (corners + center — they condition
+    # on nothing), so score them all in ONE distributed pass; the
+    # proposals below go through the same scorer one point at a time.
+    # Bit-identical to a serial per-point aggregate: both aggregate the
+    # same integer tp/fp/fn and apply the same f1 formula
+    # (tests/test_round13_ops.py pins batched == serial per point).
+    wb = [(float(mp), int(mt), int(ml)) for mp, mt, ml in warmup]
+    trials = [(*point, f1) for point, f1 in zip(wb, _rule_f1_batch(base, wb))]
+    # the TPE proposals stay sequential BY CONSTRUCTION — each
+    # conditions on every previous trial's score, so batching them
+    # would change the proposal stream (the forest arm is the
+    # batched-acquisition variant; this arm is the faithful
+    # sequential one)
+    for t in range(len(warmup), n_trials):
+        obs = sorted(trials, key=lambda r: -r[3])
+        n_good = max(1, int(round(gamma * len(obs))))
+        mp = kde_pick(
+            [r[0] for r in obs[:n_good]],
+            [r[0] for r in obs[n_good:]], p_lo, p_hi,
+        )
+        ml = kde_pick(
+            [r[2] for r in obs[:n_good]],
+            [r[2] for r in obs[n_good:]], l_lo, l_hi, as_int=True,
+        )
+        good_ts = [r[1] for r in obs[:n_good]]
+        mt = int(max(t_choices, key=lambda c: good_ts.count(c)))
+        point = (float(mp), int(mt), int(ml))
+        trials.append((*point, _rule_f1_batch(base, [point])[0]))
 
     best = max(r[3] for r in trials)
     corner_best = max(f1 for (*_, f1) in trials[:n_corners])
@@ -462,22 +433,41 @@ FOREST_TREES = 32
 FOREST_POOL = 256        # acquisition candidate pool per round
 
 
+def _rule_base(
+    scored: DataFrame, probs_col: str, gold_col: str, len_col: str
+) -> DataFrame:
+    """The three columns every rule arm scores, under the names
+    :func:`_rule_f1_batch` reads. Not cached: the caller hands in a
+    materialized ``scored`` (``q_rule_point_search`` checkpoints it once
+    for all three arms), and a per-arm cache of the same plan would be
+    one shared Spark cache entry that the first arm to finish evicts."""
+    return scored.select(
+        F.col(probs_col).alias("__probs"),
+        F.col(gold_col).cast("boolean").alias("__gold"),
+        F.col(len_col).cast("long").alias("__len"),
+    )
+
+
 def _rule_f1_batch(base: DataFrame, params: list[tuple]) -> list[float]:
-    """Score a BATCH of rule operating points in ONE distributed pass:
-    the (tiny) param relation broadcasts against the cached per-doc
-    arrays, each doc contributes its confusion cell to every admitted
-    param, and one groupBy returns ≤ len(params) rows. 500 calls cost
+    """Score a BATCH of rule operating points (one, for a sequential
+    proposal) in ONE distributed pass: the (tiny) param relation
+    broadcasts against the materialized per-doc arrays, each doc
+    contributes its confusion cell to every admitted param, and one
+    groupBy returns ≤ len(params) rows. 500 calls cost
     ~25 jobs instead of 500 — batch evaluation is how sequential
     model-based optimization maps onto a cluster (q-EI / constant-liar
     batching), and the surrogate only ever conditions on COMPLETED
     batches, exactly like skopt's n_points-per-ask mode."""
-    spark = base.sparkSession
-    pdf = spark.createDataFrame(
-        [
-            (i, float(mp), int(mt), int(ml))
-            for i, (mp, mt, ml) in enumerate(params)
-        ],
-        "pid int, mp double, mt int, ml int",
+    # an inline VALUES table is a local relation: it broadcasts from the
+    # driver with no job and no Python worker, unlike createDataFrame
+    # over a list, which cost a single-point call about 0.35 s at sf0.1;
+    # repr() plus the D suffix is an exact double literal
+    values = ", ".join(
+        f"({i}, {float(mp)!r}D, {int(mt)}, {int(ml)})"
+        for i, (mp, mt, ml) in enumerate(params)
+    )
+    pdf = base.sparkSession.sql(
+        f"SELECT * FROM VALUES {values} AS t(pid, mp, mt, ml)"
     )
     pred = (
         F.size(F.filter("__probs", lambda p: p >= F.col("mp")))
@@ -577,11 +567,7 @@ def forest_ei_search(
     span = np.array([p_hi - p_lo, t_hi - t_lo, l_hi - l_lo], dtype=float)
     lo = np.array([p_lo, t_lo, l_lo], dtype=float)
 
-    base = scored.select(
-        F.col(probs_col).alias("__probs"),
-        F.col(gold_col).cast("boolean").alias("__gold"),
-        F.col(len_col).cast("long").alias("__len"),
-    ).cache()
+    base = _rule_base(scored, probs_col, gold_col, len_col)
 
     def draw(n):
         u = rng.uniform(size=(n, 3))
@@ -601,32 +587,28 @@ def forest_ei_search(
 
     X: list[tuple] = []
     y: list[float] = []
-    try:
-        for params in [warmup]:
-            y += _rule_f1_batch(base, params)
-            X += params
-        while len(X) < n_calls:
-            b = min(batch, n_calls - len(X))
-            Xn = (np.array(X, dtype=float) - lo) / span
-            yn = np.array(y)
-            trees = [
-                _extra_tree_fit(Xn, yn, rng) for _ in range(FOREST_TREES)
-            ]
-            cand = draw(FOREST_POOL)
-            Cn = (np.array(cand, dtype=float) - lo) / span
-            preds = np.stack([_tree_predict(t, Cn) for t in trees])
-            mu, sigma = preds.mean(axis=0), preds.std(axis=0) + 1e-9
-            best = float(yn.max())
-            z = (mu - best) / sigma
-            cdf = 0.5 * (1.0 + np.vectorize(math.erf)(z / math.sqrt(2.0)))
-            pdf = np.exp(-0.5 * z * z) / math.sqrt(2.0 * math.pi)
-            ei = (mu - best) * cdf + sigma * pdf
-            picks = np.argsort(-ei)[:b]  # top-b of the pool: q-EI-lite
-            params = [cand[int(i)] for i in picks]
-            y += _rule_f1_batch(base, params)
-            X += params
-    finally:
-        base.unpersist()
+    y += _rule_f1_batch(base, warmup)
+    X += warmup
+    while len(X) < n_calls:
+        b = min(batch, n_calls - len(X))
+        Xn = (np.array(X, dtype=float) - lo) / span
+        yn = np.array(y)
+        trees = [
+            _extra_tree_fit(Xn, yn, rng) for _ in range(FOREST_TREES)
+        ]
+        cand = draw(FOREST_POOL)
+        Cn = (np.array(cand, dtype=float) - lo) / span
+        preds = np.stack([_tree_predict(t, Cn) for t in trees])
+        mu, sigma = preds.mean(axis=0), preds.std(axis=0) + 1e-9
+        best = float(yn.max())
+        z = (mu - best) / sigma
+        cdf = 0.5 * (1.0 + np.vectorize(math.erf)(z / math.sqrt(2.0)))
+        pdf = np.exp(-0.5 * z * z) / math.sqrt(2.0 * math.pi)
+        ei = (mu - best) * cdf + sigma * pdf
+        picks = np.argsort(-ei)[:b]  # top-b of the pool: q-EI-lite
+        params = [cand[int(i)] for i in picks]
+        y += _rule_f1_batch(base, params)
+        X += params
 
     best_i = max(range(len(y)), key=lambda i: (y[i], -i))
     return {
@@ -657,28 +639,21 @@ def random_search_baseline(
     p_lo, p_hi = prob_bounds
     t_lo, t_hi = topic_bounds
     l_lo, l_hi = len_bounds
-    base = scored.select(
-        F.col(probs_col).alias("__probs"),
-        F.col(gold_col).cast("boolean").alias("__gold"),
-        F.col(len_col).cast("long").alias("__len"),
-    ).cache()
+    base = _rule_base(scored, probs_col, gold_col, len_col)
     X: list[tuple] = []
     y: list[float] = []
-    try:
-        while len(X) < n_calls:
-            b = min(batch, n_calls - len(X))
-            params = [
-                (
-                    float(rng.uniform(p_lo, p_hi)),
-                    int(rng.randint(t_lo, t_hi + 1)),
-                    int(rng.randint(l_lo, l_hi + 1)),
-                )
-                for _ in range(b)
-            ]
-            y += _rule_f1_batch(base, params)
-            X += params
-    finally:
-        base.unpersist()
+    while len(X) < n_calls:
+        b = min(batch, n_calls - len(X))
+        params = [
+            (
+                float(rng.uniform(p_lo, p_hi)),
+                int(rng.randint(t_lo, t_hi + 1)),
+                int(rng.randint(l_lo, l_hi + 1)),
+            )
+            for _ in range(b)
+        ]
+        y += _rule_f1_batch(base, params)
+        X += params
     best_i = max(range(len(y)), key=lambda i: (y[i], -i))
     return {
         "best_f1": float(y[best_i]),

@@ -29,6 +29,8 @@ from typing import Callable, TypeVar
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..scratch import BUILD_WALLS  # the one build record, re-exported
+
 T = TypeVar("T")
 
 #: Serializes shared-artifact builds across driver threads (the test
@@ -40,10 +42,6 @@ T = TypeVar("T")
 BUILD_LOCK = threading.RLock()
 
 _CACHE: dict[tuple, object] = {}
-#: tag -> inclusive wall of the tag's latest build() (nested shared
-#: builds count inside their parent; bench.py exports it as
-#: shared_build_s, perfbench counts new entries as ml.shared_builds)
-BUILD_WALLS: dict[str, float] = {}
 
 
 def memo(

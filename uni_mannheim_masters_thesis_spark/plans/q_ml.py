@@ -1178,9 +1178,8 @@ def q_adaptive_search_mlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the reference's exact call budget, not just a TPE analogue.",
 )
 def q_rule_point_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE materialization serves all three arms' trial loops (each arm
-    # would otherwise re-run the LDA transform when caching its own
-    # projection)
+    # ONE materialization serves all three arms' trial loops (each
+    # arm projects it without caching; see ml.search._rule_base)
     scored = _rule_search_corpus(spark, sf_dir).localCheckpoint(eager=True)
 
     from ..ml.search import (
@@ -1188,7 +1187,7 @@ def q_rule_point_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # the three arms are INDEPENDENT given the checkpointed corpus
-    # (each owns its seed/RandomState and caches its own projection),
+    # (each owns its seed/RandomState),
     # so overlap them (guide §2.6 "overlap independent jobs"): each
     # arm's internal sequential conditioning is untouched, only the
     # arm-level serialization goes — measured 12.4 s serial → ~6 s

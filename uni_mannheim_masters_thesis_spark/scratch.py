@@ -14,7 +14,8 @@ read them back. Each such directory has one of three lifetimes:
   per-micro-batch commits write to RAM instead of paying fsyncs.
 - :func:`published` is shared across processes and kept: a derived
   table built once per on-disk state of the input table it reads,
-  published by an atomic rename.
+  published by an atomic rename. A new build reclaims the copies built
+  from an older state of the same table, or from a dataset that is gone.
 
 A root is made at its first use, under a lock. That first use also
 removes the roots of pids that are no longer alive, so the scratch of a
@@ -23,6 +24,7 @@ killed process is reclaimed by the next one instead of accumulating.
 
 from __future__ import annotations
 
+import ast
 import atexit
 import hashlib
 import os
@@ -30,6 +32,7 @@ import re
 import shutil
 import tempfile
 import threading
+import time
 from contextlib import contextmanager
 from typing import Callable, Iterator
 
@@ -38,6 +41,14 @@ _ROOT_NAME = re.compile(r"^umt_scratch_(\d+)$")
 _LOCK = threading.Lock()
 #: parent dir -> this process's root under it
 _ROOTS: dict[str, str] = {}
+#: names the ``(abspath(sf_dir), table)`` a published dir was built from
+_SOURCE = "_UMT_SOURCE"
+#: tag -> wall of the tag's latest build: each ``ml.shared.memo`` build
+#: (nested shared builds count inside their parent) and each
+#: :func:`published` build this process ran. ``ml.shared`` re-exports
+#: it; bench.py exports it as shared_build_s and discards a query's run
+#: that added to it, perfbench counts new entries as ml.shared_builds.
+BUILD_WALLS: dict[str, float] = {}
 
 
 def _pid_alive(pid: int) -> bool:
@@ -108,18 +119,53 @@ def published(
 
     ``key`` hashes the dataset's absolute path and the on-disk stamp of
     the ``table`` the directory is built from, so a rewritten input gets
-    a fresh directory, never a mutation of one another process reads."""
+    a fresh directory, never a mutation of one another process reads.
+    A build records its wall in ``BUILD_WALLS[name]`` and stamps the
+    directory with its source; a hit records nothing."""
     from .sources.testdata import disk_stamp
 
+    source = (os.path.abspath(sf_dir), table)
     try:
         stamp = disk_stamp(os.path.join(sf_dir, f"{table}.parquet"))
     except OSError:
         stamp = None
-    key = hashlib.md5(
-        repr((os.path.abspath(sf_dir), table, stamp)).encode()
-    ).hexdigest()[:10]
+    key = hashlib.md5(repr((*source, stamp)).encode()).hexdigest()[:10]
     tdir = os.path.join(tempfile.gettempdir(), f"{name}_{key}")
-    return staged_cache_dir(tdir, marker, build)
+    built = []
+
+    def build_and_stamp(stage: str) -> None:
+        t0 = time.time()
+        build(stage)
+        # after build: overwrites a stamp copied along from another cache
+        with open(os.path.join(stage, _SOURCE), "w") as f:
+            f.write(repr(source))
+        BUILD_WALLS[name] = round(time.time() - t0, 3)
+        built.append(stage)
+
+    tdir = staged_cache_dir(tdir, marker, build_and_stamp)
+    if built:
+        _reclaim_stale(tdir, name, source)
+    return tdir
+
+
+def _reclaim_stale(tdir: str, name: str, source: tuple) -> None:
+    """Remove the other ``<name>_<key>`` dirs built from ``source``
+    (an older on-disk state of the same table) or from a dataset dir
+    that no longer exists. Dirs without a source stamp predate it and
+    are kept; staging dirs never match the name pattern."""
+    parent, own = os.path.split(tdir)
+    pattern = re.compile(re.escape(name) + r"_[0-9a-f]{10}")
+    for entry in os.listdir(parent):
+        if entry == own or not pattern.fullmatch(entry):
+            continue
+        path = os.path.join(parent, entry)
+        try:
+            with open(os.path.join(path, _SOURCE)) as f:
+                other = ast.literal_eval(f.read())
+        except (OSError, ValueError, SyntaxError):
+            continue
+        if other == source or not os.path.isdir(other[0]):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def staged_cache_dir(
